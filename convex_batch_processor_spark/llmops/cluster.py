@@ -59,11 +59,28 @@ def _l2_assign_rows(
     (dist2, cluster_id) structs. NULL or dimension-mismatched vectors get
     (lowest cluster_id, NULL dist2), matching the former NULL-fold path;
     a NaN element yields NaN dist2 for every centroid and the lowest
-    cluster_id (np.inf masking), matching Spark's NaN-largest ordering.
-    (A NULL *element* inside a non-NULL vector arrives as NaN through
-    Arrow and is scored as NaN rather than the JVM's NULL — no input
-    class produces one: vectors are synthesized dense.)
+    cluster_id (np.inf masking), matching Spark's NaN-largest ordering —
+    but the pandas→Arrow return path masks NaN as null, so the JVM sees
+    NULL dist2 where the former fold produced NaN. (A NULL *element*
+    inside a non-NULL vector likewise arrives as NaN through Arrow — no
+    input class produces either: vectors are synthesized dense.)
     """
+    _assign = _nearest_centroid_udf(cent_rows)
+    return (
+        embeddings.select(id_col, vec_col)
+        .withColumn("_b", _assign(F.col(vec_col)))
+        .select(
+            F.col(id_col),
+            F.col(vec_col),  # carried through so the update step needs no re-join
+            F.col("_b.cluster_id").alias("cluster_id"),
+            F.col("_b.dist2").alias("dist2"),
+        )
+    )
+
+
+def _nearest_centroid_udf(cent_rows: list):
+    """The (cluster_id, dist2) pandas_udf behind :func:`_l2_assign_rows`;
+    its kernel (``.func``) takes one Arrow batch as a pandas Series."""
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
     cents = sorted(
@@ -84,6 +101,10 @@ def _l2_assign_rows(
         k, d = C.shape
         vals = s.to_numpy()
         n = len(vals)
+        if n == 0:  # an empty batch: valid.all() would be vacuously True
+            return pd.DataFrame(
+                {"cluster_id": np.empty(0, dtype=np.int64), "dist2": np.empty(0)}
+            )
         valid = np.fromiter(
             (v is not None and len(v) == d for v in vals), dtype=bool, count=n
         )
@@ -118,16 +139,7 @@ def _l2_assign_rows(
             dist2[valid] = [float(x) for x in dv]
         return pd.DataFrame({"cluster_id": out_c, "dist2": dist2})
 
-    return (
-        embeddings.select(id_col, vec_col)
-        .withColumn("_b", _assign(F.col(vec_col)))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),  # carried through so the update step needs no re-join
-            F.col("_b.cluster_id").alias("cluster_id"),
-            F.col("_b.dist2").alias("dist2"),
-        )
-    )
+    return _assign
 
 
 def _l2_assign(

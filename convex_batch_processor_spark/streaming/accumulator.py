@@ -30,7 +30,9 @@ one parquet file per call (one "add"), and the flush callback sees an
 epoch-bounded DataFrame it can repartition/write at any width. On a real
 cluster the staging dir would be object storage + file-notification source,
 or Kafka with ``maxOffsetsPerTrigger`` as the size trigger; the code paths
-are identical.
+are identical. Rows built on the driver (added items, flush-history rows)
+cross to the JVM as one Arrow table (``_local_frame``), so the write that
+follows is a ``LocalTableScan`` and starts no Python worker.
 
 Deterministic tests use ``flush_now`` (AvailableNow) only — no wall-clock.
 """
@@ -38,6 +40,7 @@ Deterministic tests use ``flush_now`` (AvailableNow) only — no wall-clock.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 import os
 import time
 import uuid
@@ -46,6 +49,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from .. import fsutil
 from ..sources.registry import HandleRegistry, default_registry
@@ -61,6 +66,62 @@ FLUSH_HISTORY_SCHEMA = T.StructType(
         T.StructField("error_message", T.StringType(), True),
     ]
 )
+
+
+def _decimal_rounder(dtype: T.DataType):
+    """Value mapper that rounds every decimal inside ``dtype`` HALF_UP to
+    its declared scale, as the JVM does when it reads pickled Python rows
+    (an Arrow decimal array rejects the extra digits instead). None when
+    ``dtype`` holds no decimal. Works on internal values: structs are
+    tuples, maps dicts, arrays sequences."""
+    if isinstance(dtype, T.DecimalType):
+        exp = decimal.Decimal(1).scaleb(-dtype.scale)
+        ctx = decimal.Context(prec=38)  # Spark's maximum decimal precision
+        f = lambda v: v.quantize(exp, rounding=decimal.ROUND_HALF_UP, context=ctx)  # noqa: E731
+    elif isinstance(dtype, T.ArrayType):
+        e = _decimal_rounder(dtype.elementType)
+        f = e and (lambda v: [e(x) for x in v])
+    elif isinstance(dtype, T.MapType):
+        k, e = _decimal_rounder(dtype.keyType), _decimal_rounder(dtype.valueType)
+        f = (k or e) and (lambda v: {k(a) if k else a: e(x) if e else x for a, x in v.items()})
+    elif isinstance(dtype, T.StructType):
+        fs = [_decimal_rounder(fld.dataType) for fld in dtype.fields]
+        f = any(fs) and (lambda v: tuple(g(x) if g else x for g, x in zip(fs, v)))
+    else:
+        return None
+    return (lambda v: None if v is None else f(v)) if f else None
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` with an Arrow transport.
+
+    Each row takes the same Python steps as the list path — the type
+    verifier, the dict/tuple converter, ``StructType.toInternal`` (so a
+    naive datetime is still read in the process time zone) and the JVM's
+    HALF_UP decimal rounding — and the internal columns then cross to
+    the JVM as one ``pyarrow.Table``. The plan is a ``LocalTableScan``:
+    the list path's ``parallelize`` builds a ``PythonRDD``, so every job
+    over it started a Python worker just to re-pickle a few rows. One
+    difference: a decimal too wide for its precision raises here
+    (``ArrowInvalid``), not later inside the job that reads the frame."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    arrays = []
+    for col, field_, arrow_type in zip(columns, schema.fields, arrow_schema.types):
+        rnd = _decimal_rounder(field_.dataType)
+        if rnd is not None:
+            col = [rnd(v) for v in col]
+        arrays.append(pa.array(col, type=arrow_type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 @dataclass
@@ -101,10 +162,15 @@ class BatchAccumulator:
     def add_items(self, items: list[dict]) -> int:
         """Append one add-call's items to the staging log (append-only —
         mirrors the reference's conflict-free items insert, lib.ts:87-96).
-        Returns the number of items staged."""
+        Returns the number of items staged.
+
+        The items are checked and converted exactly as
+        ``createDataFrame(items, item_schema)`` would (a bad item raises
+        before anything is written), then cross to the JVM as one Arrow
+        table: the staging write runs no Python worker."""
         if not items:
             return 0
-        df = self.spark.createDataFrame(items, schema=self.item_schema)
+        df = _local_frame(self.spark, items, self.item_schema)
         # one file per add: the add is the atomic unit the size trigger counts
         df.coalesce(1).write.mode("append").parquet(self.staging_dir)
         return len(items)
@@ -140,7 +206,7 @@ class BatchAccumulator:
             )
         ]
         (
-            self.spark.createDataFrame(row, schema=FLUSH_HISTORY_SCHEMA)
+            _local_frame(self.spark, row, FLUSH_HISTORY_SCHEMA)
             .coalesce(1)
             .write.mode("append")
             .parquet(self.history_dir)
@@ -309,7 +375,7 @@ class BatchAccumulator:
         exactly-one row per attempt should dedupe on
         (batch_id, epoch_id, success) keeping the latest flushed_at."""
         if not fsutil.is_dir(self.spark, self.history_dir):
-            return self.spark.createDataFrame([], schema=FLUSH_HISTORY_SCHEMA)
+            return _local_frame(self.spark, [], FLUSH_HISTORY_SCHEMA)
         df = self.spark.read.schema(FLUSH_HISTORY_SCHEMA).parquet(self.history_dir)
         df = df.orderBy(F.col("flushed_at").desc(), F.col("epoch_id").desc())
         return df.limit(limit) if limit is not None else df

@@ -143,6 +143,24 @@ def test_empty_input_raises_clear_error(spark):
         product_quantize(empty, m=2, k=2, n_iter=1)
 
 
+def test_assign_kernel_handles_empty_and_partial_batches(spark):
+    """The nearest-centroid kernel on one Arrow batch: an empty batch
+    yields an empty frame (it used to hit np.concatenate([])), and an
+    invalid vector gets (lowest cluster_id, NULL dist2)."""
+    import pandas as pd
+
+    from convex_batch_processor_spark.llmops.cluster import _nearest_centroid_udf
+
+    kernel = _nearest_centroid_udf([(5, [1.0, 0.0]), (2, [0.0, 1.0])]).func
+    out = kernel(pd.Series([], dtype=object))
+    assert list(out.columns) == ["cluster_id", "dist2"] and len(out) == 0
+
+    out = kernel(pd.Series([np.array([0.9, 0.1]), None, np.array([1.0])], dtype=object))
+    assert out["cluster_id"].tolist() == [5, 2, 2]
+    assert out["dist2"][0] == pytest.approx(0.02)
+    assert out["dist2"][1:].isna().all()
+
+
 def test_pca_power_matches_numpy_direction(spark, sf_dir, emb_np):
     """The rounded power iterate must align with numpy's exact top
     eigenvector of the centered covariance: |cos| >= 0.98 after 20

@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from stale_green_check import (  # noqa: E402
     _PKG,
+    _REPO,
     _FileInfo,
     latest_verdicts,
     reachable_symbols,
@@ -86,13 +87,23 @@ def test_verified_states_resolve_to_parent_commits():
 
 
 def test_latest_verdict_wins():
-    """A name re-checked in a later round carries the later round."""
-    verdicts = latest_verdicts()
-    # minhash_estimate_neardup: rows-only in r3, hash-green in r6,
-    # re-verified hash-green in the r12 driver window (CORRECTNESS_r12,
-    # landed in the driver's round-close commit — this pin goes stale
-    # whenever a future rotation re-checks the name; bump it then)
-    assert verdicts["minhash_estimate_neardup"] == 12
+    """A name re-checked in a later round carries the later round.
+
+    minhash_estimate_neardup was rows-only in r3, hash-green in r6 and
+    re-verified since; every rotation may re-check it again, so the test
+    derives the expected round from the CORRECTNESS files rather than
+    pinning one."""
+    import glob
+    import json
+
+    name = "minhash_estimate_neardup"
+    rounds = []
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            if name in json.load(f):
+                rounds.append(int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")]))
+    assert len(rounds) >= 2, rounds  # re-checked, so "latest" is exercised
+    assert latest_verdicts()[name] == max(rounds) >= 6
 
 
 def test_stale_records_are_registered_and_explained():
