@@ -108,7 +108,11 @@ class BatchProcessor:
                     pass
 
         t = threading.Thread(target=_bg, name=f"flush-{batch_id}", daemon=True)
-        self._flush_threads.setdefault(batch_id, []).append(t)
+        # prune finished flushes so repeated non-blocking calls keep the
+        # list bounded by the ones still running
+        threads = self._flush_threads.setdefault(batch_id, [])
+        threads[:] = [x for x in threads if x.is_alive()]
+        threads.append(t)
         t.start()
         return True
 
@@ -265,8 +269,12 @@ class BatchProcessor:
         return self._store().list(status)
 
     def delete_iterator_job(self, job_id: str) -> bool:
-        """deleteIteratorJob (index.ts:341-348): terminal jobs only."""
-        return self._store().delete(job_id)
+        """deleteIteratorJob (index.ts:341-348): terminal jobs only. A
+        deleted job is unknown afterwards, attached or not."""
+        deleted = self._store().delete(job_id)
+        if deleted:
+            self._iterators.pop(job_id, None)
+        return deleted
 
     def _store(self):
         from .iterator import JobStore

@@ -116,8 +116,8 @@ def scrub_covered_positions(
     at 0-based position p covers tokens p..p+n-1; adjacent duplicated
     runs closer than the gram width overlap, so the distinct is
     load-bearing). Built on :func:`positional_gram_index` so the span
-    detector (queries/llm72), the scrub accounting (queries/llm73), and
-    the dedup impact report (queries/llm74) stay ONE policy.
+    detector (queries/llm72) and the scrub accounting (queries/llm73)
+    stay ONE policy.
 
     Scale: the coverage explode is n x the DUPLICATED-position count
     (duplication-bounded, not corpus-bounded), then one id-keyed

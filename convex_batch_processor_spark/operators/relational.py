@@ -45,16 +45,6 @@ def point_lookup(df: DataFrame, **eq: object) -> DataFrame:
     return df.filter(cond) if cond is not None else df
 
 
-def range_scan(df: DataFrame, key_eq: dict[str, object], lt_col: str, lt_value: object) -> DataFrame:
-    """S2: indexed range scan — equality prefix + ``col < cutoff``.
-
-    Parity: snapshot read of batchItems ``createdAt < flushStartedAt + 1``
-    (lib.ts:366-371, 624-630). The cutoff is the micro-batch epoch boundary.
-    """
-    out = point_lookup(df, **key_eq)
-    return out.filter(F.col(lt_col) < F.lit(lt_value))
-
-
 # --- §2.2 projections / string key ops -------------------------------------
 
 def parse_batch_id(df: DataFrame, id_col: str, base_col: str = "base_id", seq_col: str = "seq") -> DataFrame:

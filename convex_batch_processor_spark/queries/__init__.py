@@ -8,19 +8,11 @@ from __future__ import annotations
 
 from .registry import QUERIES, QuerySpec, prioritize, register  # noqa: F401
 
-# Import order defines registration order, and the round driver verifies the
-# FIRST 50 registry entries against the DuckDB oracle. Round 1 checked the
-# relational/analytics/dataflow pack; round 2 the llm/misc/late-tpch pack;
-# round 3 llm2 + llm3 + llm. Round 4 front-loads the only entries without a
-# driver verdict yet: the whole llm4 pack (registered last in round 3), the
-# new round-4 pack (llm5), then llm3 (whose product_quantize_pq crashed the
-# round-3 canonicalizer and is now scalarized, and whose kmeans_clusters
-# gained an oracle) and llm (sampled_by_lang gained an oracle). Already-green
-# queries rotate to the back; the local gate (tests/oracle_check.py) still
-# covers all of them every run.
-from . import llm4  # noqa: E402,F401  (no driver verdict yet — first this round)
-from . import llm5  # noqa: E402,F401  (round-4 additions incl. relocated ivf_search_topk)
-from . import llm6  # noqa: E402,F401  (late-r4 sketch pack + image/video codecs — all oracle-backed)
+# Import order is registration order; the external driver verifies the
+# first 50 registry entries against the DuckDB oracle (see prioritize() below).
+from . import llm4  # noqa: E402,F401
+from . import llm5  # noqa: E402,F401
+from . import llm6  # noqa: E402,F401
 from . import llm3  # noqa: E402,F401
 from . import llm  # noqa: E402,F401
 from . import llm2  # noqa: E402,F401
@@ -31,92 +23,77 @@ from . import dataflow  # noqa: E402,F401
 from . import analytics2  # noqa: E402,F401
 from . import relational  # noqa: E402,F401
 from . import tpch_star  # noqa: E402,F401
-from . import llm7  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm8  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm9  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm10  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm11  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm12  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm13  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm14  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm15  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm16  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm17  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm18  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm19  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm20  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm21  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm22  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm23  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm24  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm25  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm26  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm27  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm28  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm29  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm30  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm31  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm32  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm33  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm34  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm35  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm36  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm37  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm38  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm39  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm40  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm41  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm42  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm43  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm44  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm45  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm46  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm47  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm48  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm49  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm50  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm51  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm52  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm53  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm54  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm55  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm56  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm57  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm58  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm59  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm60  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm61  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm62  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm63  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm64  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm65  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm66  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm67  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm68  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm69  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm70  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm71  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm72  # noqa: E402,F401  (r9-pre-flighted pack, registered late r10 when the freeze lifted; moved to the window front at the r11 swap)
-from . import llm73  # noqa: E402,F401  (r10-pre-flighted pack, registered at the r11 close per the one-pack-per-round cadence; registers at the BACK — fronts the r12 window)
+from . import llm7  # noqa: E402,F401
+from . import llm8  # noqa: E402,F401
+from . import llm9  # noqa: E402,F401
+from . import llm10  # noqa: E402,F401
+from . import llm11  # noqa: E402,F401
+from . import llm12  # noqa: E402,F401
+from . import llm13  # noqa: E402,F401
+from . import llm14  # noqa: E402,F401
+from . import llm15  # noqa: E402,F401
+from . import llm16  # noqa: E402,F401
+from . import llm17  # noqa: E402,F401
+from . import llm18  # noqa: E402,F401
+from . import llm19  # noqa: E402,F401
+from . import llm20  # noqa: E402,F401
+from . import llm21  # noqa: E402,F401
+from . import llm22  # noqa: E402,F401
+from . import llm23  # noqa: E402,F401
+from . import llm24  # noqa: E402,F401
+from . import llm25  # noqa: E402,F401
+from . import llm26  # noqa: E402,F401
+from . import llm27  # noqa: E402,F401
+from . import llm28  # noqa: E402,F401
+from . import llm29  # noqa: E402,F401
+from . import llm30  # noqa: E402,F401
+from . import llm31  # noqa: E402,F401
+from . import llm32  # noqa: E402,F401
+from . import llm33  # noqa: E402,F401
+from . import llm34  # noqa: E402,F401
+from . import llm35  # noqa: E402,F401
+from . import llm36  # noqa: E402,F401
+from . import llm37  # noqa: E402,F401
+from . import llm38  # noqa: E402,F401
+from . import llm39  # noqa: E402,F401
+from . import llm40  # noqa: E402,F401
+from . import llm41  # noqa: E402,F401
+from . import llm42  # noqa: E402,F401
+from . import llm43  # noqa: E402,F401
+from . import llm44  # noqa: E402,F401
+from . import llm45  # noqa: E402,F401
+from . import llm46  # noqa: E402,F401
+from . import llm47  # noqa: E402,F401
+from . import llm48  # noqa: E402,F401
+from . import llm49  # noqa: E402,F401
+from . import llm50  # noqa: E402,F401
+from . import llm51  # noqa: E402,F401
+from . import llm52  # noqa: E402,F401
+from . import llm53  # noqa: E402,F401
+from . import llm54  # noqa: E402,F401
+from . import llm55  # noqa: E402,F401
+from . import llm56  # noqa: E402,F401
+from . import llm57  # noqa: E402,F401
+from . import llm58  # noqa: E402,F401
+from . import llm59  # noqa: E402,F401
+from . import llm60  # noqa: E402,F401
+from . import llm61  # noqa: E402,F401
+from . import llm62  # noqa: E402,F401
+from . import llm63  # noqa: E402,F401
+from . import llm64  # noqa: E402,F401
+from . import llm65  # noqa: E402,F401
+from . import llm66  # noqa: E402,F401
+from . import llm67  # noqa: E402,F401
+from . import llm68  # noqa: E402,F401
+from . import llm69  # noqa: E402,F401
+from . import llm70  # noqa: E402,F401
+from . import llm71  # noqa: E402,F401
+from . import llm72  # noqa: E402,F401
+from . import llm73  # noqa: E402,F401
 
 
-# Round-12 rotation (NOTES.md "Round-12 rotation plan"): the driver
-# verifies the FIRST 50 registry entries. The r11 window retired the
-# last stale debt (ledger 0 for the first time), so this window carries
-# the 9 oracle-backed llm73 names registered at the r11 close (never
-# driver-verified — placed by hand; `--next-window` only proposes
-# already-verdicted names; the rows-only isotonic_calibration_pava
-# records no hash verdict by contract and stays outside), then 41
-# machine-derived freshness pads (oldest-verdict fresh names —
-# `stale_green_check.py --next-window` re-run STRICT at this swap,
-# with CORRECTNESS_r11.json tracked, matched the NOTES preview
-# exactly: supplier_triangles … clustering_purity). All 50
-# pre-flighted at sf0.01 on r11 final HEAD (50/50 PASS) and
-# re-verified at this swap after the in-window rule-14 strips (see the
-# swap commit: rounded exact ratios emitted raw where the whole chain
-# is fixed-IEEE over bit-identical doubles, kept where a
-# decimal→double cast can pass 2^53 — the r11 zipf leaf-absorption
-# lesson).
+# The driver window: the llm73 oracle-backed names first, then the
+# freshness pads that `tests/stale_green_check.py --next-window` derived.
 prioritize([
     # llm73 pack, oracle-backed (9) — never-verified, front of window
     "top_ngram_char_fraction", "substring_dedup_scrub",

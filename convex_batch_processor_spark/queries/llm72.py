@@ -37,8 +37,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # name -> (fn, oracle_sql) — kept as the pre-flight harness's index
-# (tests/test_r11_preflight.py and tests/scale_check.py parametrize
-# over it); registration happens at the bottom of the module.
+# (tests/test_r11_preflight.py parametrizes over it); registration
+# happens at the bottom of the module.
 CANDIDATES: dict[str, tuple] = {}
 
 

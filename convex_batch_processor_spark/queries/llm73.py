@@ -166,8 +166,7 @@ _SCRUB_N = _SPAN_N
 
 # The toks -> positional grams -> cross-doc duplicates -> DISTINCT
 # covered token positions CTE chain — the DuckDB twin of
-# llmops.dedup.scrub_covered_positions, shared by this oracle and the
-# dedup impact report's (llm74) so the scrub policy is ONE text.
+# llmops.dedup.scrub_covered_positions.
 SCRUB_COVERED_CTES = f"""toks AS (
         SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
         FROM documents WHERE text IS NOT NULL),
@@ -321,7 +320,7 @@ _W_OFF = 1000000
 def hashed_token_weight(tok_col="tok"):
     """Exact BIGINT pseudo-weight in [-1e6, 1e6] (read at scale 1e-6)
     from a token's 60-bit md5 prefix — the deterministic weight table
-    shared by the scorer and its retention report (llm74). The sign of
+    of the scorer. The sign of
     the per-doc SUM is the 0.5-probability decision boundary (sigmoid is
     monotone), so thresholding needs no float at all."""
     col = F.col(tok_col) if isinstance(tok_col, str) else tok_col

@@ -73,15 +73,9 @@ def get_spark(
         # inventories, convergence checks). size-first targets
         # advisoryPartitionSizeInBytes (guide §2.2 "fewer, larger reduce
         # partitions"); at 100 TB the advisory bound — not core count —
-        # is what sizes reducers anyway. Env-overridable for A/B.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"),
-        )
+        # is what sizes reducers anyway.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -406,38 +406,32 @@ class BatchAccumulator:
         return {n for n in existing - admitted if n.endswith(".parquet")}
 
     @staticmethod
-    def _tombstoned(existing: set[str]) -> set[int]:
-        """Sequences whose COMMITTED batch document was deleted
+    def _markers(existing: set[str], prefix: str) -> set[int]:
+        """Sequences carrying a ``{prefix}{seq}`` deletion marker in staging.
+
+        ``_deleted_{seq}``: the COMMITTED batch document was deleted
         (lib.ts:300-337 deletes the batch doc itself, so the batch
         disappears from getAllBatchesForBaseId). The epoch number lives
         immutably in the checkpoint source log, so deletion is recorded
-        as a ``_deleted_{seq}`` marker file in staging; list_batches
-        omits marked sequences and delete_batch reports them not-found."""
-        out: set[int] = set()
-        for n in existing:
-            if n.startswith("_deleted_") and not n.startswith("_deleted_acc_"):
-                try:
-                    out.add(int(n[len("_deleted_"):]))
-                except ValueError:
-                    pass
-        return out
+        as a marker file; list_batches omits marked sequences and
+        delete_batch reports them not-found.
 
-    @staticmethod
-    def _acc_tombstoned(existing: set[str]) -> set[int]:
-        """Sequences whose EMPTY ACCUMULATING batch doc was deleted
-        (``_deleted_acc_{seq}`` markers). Unlike committed tombstones
-        these are conditional: they only suppress the accumulating entry
-        while it stays empty — the reference recreates the batch doc
-        when items arrive again, so staged ROWS (zero-row files don't
-        count — same emptiness predicate as delete_batch) or an admitted
-        epoch under the same sequence void the marker (it is simply
-        ignored for any sequence other than the CURRENT empty
-        next_seq)."""
+        ``_deleted_acc_{seq}``: the EMPTY ACCUMULATING batch doc was
+        deleted. Unlike committed tombstones these are conditional: they
+        only suppress the accumulating entry while it stays empty — the
+        reference recreates the batch doc when items arrive again, so
+        staged ROWS (zero-row files don't count — same emptiness
+        predicate as delete_batch) or an admitted epoch under the same
+        sequence void the marker (it is simply ignored for any sequence
+        other than the CURRENT empty next_seq).
+
+        The ``_deleted_`` prefix never picks up an ``_deleted_acc_``
+        marker: ``int("acc_N")`` does not parse."""
         out: set[int] = set()
         for n in existing:
-            if n.startswith("_deleted_acc_"):
+            if n.startswith(prefix):
                 try:
-                    out.add(int(n[len("_deleted_acc_"):]))
+                    out.add(int(n[len(prefix):]))
                 except ValueError:
                     pass
         return out
@@ -514,7 +508,7 @@ class BatchAccumulator:
                 "last_updated_at": dt.datetime.fromtimestamp(max(times)) if times else fallback,
             }
 
-        deleted = self._tombstoned(existing)
+        deleted = self._markers(existing, "_deleted_")
         out = [
             entry(seq, names, "completed" if seq in committed else "flushing")
             for seq, names in sorted(by_epoch.items())
@@ -529,7 +523,7 @@ class BatchAccumulator:
         # frame) has no items, so it neither blocks the delete there nor
         # voids the marker here.
         pending_rows = sum(counts.get(n, 0) for n in pending)
-        if pending_rows > 0 or next_seq not in self._acc_tombstoned(existing):
+        if pending_rows > 0 or next_seq not in self._markers(existing, "_deleted_acc_"):
             out.append(entry(next_seq, pending, "accumulating"))
         return out
 
@@ -546,7 +540,7 @@ class BatchAccumulator:
         next_seq = max(by_epoch) + 1 if by_epoch else 0
         if sequence not in by_epoch and sequence != next_seq:
             return {"deleted": False, "reason": "Batch not found"}
-        if sequence in self._tombstoned(existing):
+        if sequence in self._markers(existing, "_deleted_"):
             # batch doc already deleted — the reference's second delete
             # hits a missing document (lib.ts:304-306)
             return {"deleted": False, "reason": "Batch not found"}
@@ -558,7 +552,7 @@ class BatchAccumulator:
         if sequence == next_seq:
             if self._count_staged(self._pending_names(by_epoch, existing)) > 0:
                 return {"deleted": False, "reason": "Cannot delete batch with pending items"}
-            if sequence in self._acc_tombstoned(existing):
+            if sequence in self._markers(existing, "_deleted_acc_"):
                 # already deleted and still empty — the doc is gone until
                 # items arrive and recreate it (lib.ts:304-306)
                 return {"deleted": False, "reason": "Batch not found"}

@@ -58,27 +58,13 @@ DEFAULT_QUERIES = [
     "supplier_triangles",          # ordered-edge triangle enumeration, fanout-capped
     "cosine_lsh_portable_neardup", # 16-plane LSH bucket join + exact rerank
     "golden_record_merge",         # min-label CC + component-keyed aggregations
-    # round-9 additions: the UNREGISTERED round-11 pre-flight pack's
-    # expensive families (queries/llm72.py) — pinned empirically BEFORE
-    # registration so the round-11 swap inherits a passing sweep
+    # round-9/10 additions: the llm72 and llm73 packs' expensive families
     "substring_dedup_spans",       # positional-gram index + islands window
     "kneser_ney_doc_logprob",      # bigram index + occurrence join-back
     "hits_part_supplier",          # unrolled bipartite iteration
     "rank_gauss_prices",           # per-segment rank window + map-side transform
-    # round-10 additions: the round-12 pre-flight pack's expensive
-    # families (queries/llm73.py) — pinned before registration, as above
     "top_ngram_char_fraction",     # 3x positional gram explode + gram reduce
     "substring_dedup_scrub",       # gram index + 8x coverage explode + distinct
-    # the round-13 pack's expensive families (queries/llm74.py)
-    "cross_source_contamination_matrix",  # distinct grams + |sources|^2-fanout join
-    "dedup_impact_report",         # text-keyed window + the shared gram index
-    # round-11 additions: the round-14 pre-flight pack's expensive
-    # families (queries/llm75.py) — pinned before registration, as above
-    "neardup_threshold_sweep",     # PPJoin pair expansion x threshold grid
-    "knn_graph_degree_stats",      # probe x corpus exact kNN edges
-    # the round-15 pack's expensive families (queries/llm76.py)
-    "minhash_candidate_efficiency",  # full LSH pipeline + count rollups
-    "embedding_anisotropy_probe",    # (n/20)^2 probe product
 ]
 
 #: second-decade exponent above this fails the sweep
@@ -88,32 +74,10 @@ RUNS = 3
 
 def main() -> None:
     from convex_batch_processor_spark.queries import QUERIES
-    from convex_batch_processor_spark.queries.llm72 import (
-        CANDIDATES as _C72,
-    )
-    from convex_batch_processor_spark.queries.llm73 import (
-        CANDIDATES as _C73,
-    )
-    from convex_batch_processor_spark.queries.llm74 import (
-        CANDIDATES as _C74,
-    )
-    from convex_batch_processor_spark.queries.llm75 import (
-        CANDIDATES as _C75,
-    )
-    from convex_batch_processor_spark.queries.llm76 import (
-        CANDIDATES as _C76,
-    )
     from convex_batch_processor_spark.session import get_spark
 
-    # a name collision across the hand-maintained packs would make the
-    # dict merge silently sweep the wrong implementation
-    _packs = [set(_C72), set(_C73), set(_C74), set(_C75), set(_C76)]
-    for i, a in enumerate(_packs):
-        for b in _packs[i + 1:]:
-            assert not (a & b), f"duplicate pre-flight names: {a & b}"
-    CANDIDATES = {**_C72, **_C73, **_C74, **_C75, **_C76}
     names = sys.argv[1:] or DEFAULT_QUERIES
-    unknown = [n for n in names if n not in QUERIES and n not in CANDIDATES]
+    unknown = [n for n in names if n not in QUERIES]
     if unknown:
         sys.exit(f"unknown query name(s): {unknown}")
 
@@ -127,7 +91,7 @@ def main() -> None:
 
     failures = []
     for name in names:
-        fn = QUERIES[name].fn if name in QUERIES else CANDIDATES[name][0]
+        fn = QUERIES[name].fn
         med = [time_query(spark, fn, sf_dir, RUNS) for sf_dir, _sf in SF_DIRS]
         alphas = [
             round(math.log10(med[i + 1] / med[i]), 3) for i in range(len(med) - 1)

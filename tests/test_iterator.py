@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from convex_batch_processor_spark.catalog import load_table
+from convex_batch_processor_spark.client import BatchProcessor
 from convex_batch_processor_spark.iterator import TableIterator, backoff_ms
 from convex_batch_processor_spark.sources.registry import HandleRegistry
 
@@ -206,6 +208,39 @@ def test_status_list_delete(tmp_path, customer):
     assert it.store.delete("a") is True
     assert {s.job_id for s in it.store.list()} == {"b"}
     assert [s.job_id for s in it.store.list(status="running")] == ["b"]
+
+
+def test_deleted_job_is_unknown_to_the_facade(tmp_path, customer):
+    """After delete_iterator_job the facade must forget the attached
+    iterator too: run/pause report the documented unknown-job KeyError,
+    not a FileNotFoundError from the deleted state file."""
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, c: None)
+    bp = BatchProcessor(spark=customer.sparkSession, root=str(tmp_path), registry=reg)
+    st = bp.start_iterator("gone", customer, "c_custkey", "noop", batch_size=10_000)
+    assert st.status == "completed"
+    assert bp.delete_iterator_job("gone") is True
+    with pytest.raises(KeyError, match="unknown iterator job"):
+        bp.run_iterator("gone")
+    with pytest.raises(KeyError, match="unknown iterator job"):
+        bp.pause_iterator("gone")
+    assert bp.delete_iterator_job("gone") is False
+
+
+def test_background_flush_threads_are_pruned(spark, tmp_path):
+    """Each flush(block=False) keeps only the flushes still running, so
+    repeated calls without wait_for_flushes do not grow the thread list."""
+    bp = BatchProcessor(spark=spark, root=str(tmp_path), registry=HandleRegistry())
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    bp.accumulator("idle", schema, "noop")
+    for _ in range(3):
+        assert bp.flush("idle", block=False) is True
+        t = bp._flush_threads["idle"][-1]
+        t.join(timeout=60)  # nothing staged: the flush returns at once
+        assert not t.is_alive()
+    assert len(bp._flush_threads["idle"]) == 1
+    bp.wait_for_flushes("idle")
+    assert "idle" not in bp._flush_threads
 
 
 def test_backoff_formula_parity():

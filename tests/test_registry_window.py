@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 from convex_batch_processor_spark.queries import QUERIES
 
@@ -69,12 +71,9 @@ def _latest_verdicts() -> dict[str, int]:
 
 
 def test_registry_is_exactly_301():
-    """The llm73 pack registered at the r11 close (291 -> 301); the
-    llm74 pack registers at the ROUND-12 CLOSE (301 -> 307, NOTES
-    one-pack-per-round cadence). Pinned EXACTLY (ADVICE r11: a relaxed
-    tuple is dead slack that would mask a lost pack registration) —
-    this pin moves only in the same commit as a pre-flighted pack's
-    registration loop."""
+    """The llm73 pack registered at the r11 close (291 -> 301). Pinned
+    EXACTLY (ADVICE r11: a relaxed tuple is dead slack that would mask
+    a lost pack registration)."""
     assert len(QUERIES) == 301, len(QUERIES)
 
 
@@ -129,6 +128,24 @@ def test_round12_window_is_fixture_gated():
     assert missing == [], missing
     # and the current pack tier must come from a suite, not be assumed
     assert set(_PACK_TIER) <= gated
+
+
+def test_every_query_module_is_imported_by_the_registry():
+    """Every ``queries/*.py`` module must be reached by importing the
+    package: a module the registry never imports is inventory no driver,
+    bench or oracle gate can run. Checked in a fresh interpreter so
+    modules other tests import cannot mask an unreachable one."""
+    code = (
+        "import pkgutil, sys\n"
+        "import convex_batch_processor_spark.queries as q\n"
+        "print(' '.join(m.name for m in pkgutil.iter_modules(q.__path__)\n"
+        "               if f'{q.__name__}.{m.name}' not in sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=_REPO, check=True,
+        capture_output=True, text=True,
+    ).stdout.split()
+    assert out == [], f"query modules the registry never imports: {out}"
 
 
 def test_every_window_entry_is_oracle_backed():
