@@ -20,12 +20,14 @@ Differences (documented, by design):
 from __future__ import annotations
 
 import threading
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .iterator import IteratorJobState, TableIterator
+from .fsutil import check_name
+from .iterator import IteratorJobState, JobStore, TableIterator
 from .sources.registry import HandleRegistry, default_registry
 from .streaming.accumulator import BatchAccumulator
 
@@ -45,6 +47,10 @@ class BatchProcessor:
     _accumulators: dict[str, BatchAccumulator] = field(default_factory=dict)
     _iterators: dict[str, TableIterator] = field(default_factory=dict)
     _flush_threads: dict[str, list[threading.Thread]] = field(default_factory=dict)
+    _jobs: JobStore = field(init=False)
+
+    def __post_init__(self) -> None:
+        self._jobs = JobStore(f"{self.root}/jobs")
 
     # --- accumulator surface (reference index.ts:214-301) -------------------
 
@@ -59,6 +65,7 @@ class BatchProcessor:
         """Create/fetch the named batch accumulator (config ≈ BatchConfig,
         index.ts:204-213)."""
         if batch_id not in self._accumulators:
+            check_name("batch id", batch_id)
             self._accumulators[batch_id] = BatchAccumulator(
                 spark=self.spark,
                 batch_id=batch_id,
@@ -117,9 +124,16 @@ class BatchProcessor:
         return True
 
     def wait_for_flushes(self, batch_id: str, timeout_s: float | None = None) -> None:
-        """Join background flushes started with ``flush(block=False)``."""
-        for t in self._flush_threads.pop(batch_id, []):
-            t.join(timeout_s)
+        """Join background flushes started with ``flush(block=False)``.
+        ``timeout_s`` bounds the whole call; flushes still running when it
+        expires stay tracked, so a later call joins them."""
+        threads = self._flush_threads.get(batch_id, [])
+        deadline = None if timeout_s is None else time.monotonic() + timeout_s
+        for t in threads:
+            t.join(None if deadline is None else max(0.0, deadline - time.monotonic()))
+        threads[:] = [t for t in threads if t.is_alive()]
+        if not threads:
+            self._flush_threads.pop(batch_id, None)
 
     def get_batch_status(self, batch_id: str) -> dict:
         """getBatchStatus (index.ts:243-252)."""
@@ -174,14 +188,13 @@ class BatchProcessor:
         on_complete: str | None = None,
         run: bool = True,
         plan_ranges: bool | None = None,
-        validate_key: bool = True,
     ) -> IteratorJobState:
         """startIterator (index.ts:272-292). ``run=True`` drives the job to
         a terminal/paused state synchronously (the reference self-schedules
         chunks; here the caller owns the loop — pass run=False and call
         run_iterator() to step cooperatively)."""
         it = TableIterator(
-            state_dir=f"{self.root}/jobs",
+            state_dir=self._jobs.state_dir,
             source=source,
             key_col=key_col,
             registry=self.registry,
@@ -194,7 +207,6 @@ class BatchProcessor:
             max_retries=max_retries,
             on_complete=on_complete,
             plan_ranges=plan_ranges,
-            validate_key=validate_key,
         )
         # attach only AFTER start() succeeds: a duplicate-id start raises,
         # and installing first would clobber the live iterator with one
@@ -208,85 +220,50 @@ class BatchProcessor:
         {root}/jobs, but the source DataFrame does not — the caller
         re-supplies it, like the reference re-creating function handles
         client-side on every construction, index.ts:221-237)."""
-        store = self._store()
-        if not store.exists(job_id):
-            raise KeyError(f"no persisted state for iterator job {job_id!r}")
-        it = TableIterator(
-            state_dir=f"{self.root}/jobs", source=source, key_col=key_col, registry=self.registry
+        st = self._jobs.load(job_id)
+        self._iterators[job_id] = TableIterator(
+            state_dir=self._jobs.state_dir, source=source, key_col=key_col, registry=self.registry
         )
-        self._iterators[job_id] = it
-        return store.load(job_id)
+        return st
 
     def run_iterator(self, job_id: str, max_chunks: int | None = None) -> IteratorJobState:
-        return self._it(job_id).run(job_id, max_chunks=max_chunks)
+        if job_id not in self._iterators:
+            self._jobs.load(job_id)  # raises KeyError for an unknown job
+            raise KeyError(
+                f"iterator job {job_id!r} has persisted state but no attached "
+                f"source in this instance — call attach_iterator(job_id, source, key_col)"
+            )
+        return self._iterators[job_id].run(job_id, max_chunks=max_chunks)
 
     def pause_iterator(self, job_id: str) -> IteratorJobState:
         """pauseIterator (index.ts:294-300). State-only — works on
         persisted jobs from other instances (the running loop honors it at
         its next chunk boundary)."""
-        return self._controller(job_id).pause(job_id)
+        return self._jobs.pause(job_id)
 
     def resume_iterator(self, job_id: str) -> IteratorJobState:
         """resumeIterator (index.ts:302-308). State-only; to actually DRIVE
         a resumed job from a fresh instance, attach_iterator() first."""
-        return self._controller(job_id).resume(job_id)
+        return self._jobs.resume(job_id)
 
     def cancel_iterator(self, job_id: str) -> IteratorJobState:
         """cancelIterator (index.ts:310-316). State-only."""
-        return self._controller(job_id).cancel(job_id)
-
-    def _controller(self, job_id: str) -> TableIterator:
-        """Iterator for lifecycle transitions: the attached one if present,
-        else a detached controller over the state store (transitions never
-        touch the source DataFrame)."""
-        if job_id in self._iterators:
-            return self._iterators[job_id]
-        if not self._store().exists(job_id):
-            raise KeyError(f"unknown iterator job {job_id!r}")
-        return TableIterator(
-            state_dir=f"{self.root}/jobs", source=None, key_col="", registry=self.registry
-        )
+        return self._jobs.cancel(job_id)
 
     def get_iterator_status(self, job_id: str) -> dict:
         """getIteratorStatus (index.ts:318-327) — works on persisted jobs
         from previous instances too (reads the state store directly)."""
-        store = self._store()
-        if not store.exists(job_id):
-            raise KeyError(f"unknown iterator job {job_id!r}")
-        st = store.load(job_id)
-        return {
-            "job_id": st.job_id,
-            "status": st.status,
-            "processed_count": st.processed_count,
-            "cursor": st.cursor,
-            "retry_count": st.retry_count,
-            "error_message": st.error_message,
-        }
+        return self._jobs.status(job_id)
 
     def list_iterator_jobs(self, status: str | None = None) -> list[IteratorJobState]:
         """listIteratorJobs (index.ts:329-339) — state-store backed, sees
         jobs persisted by previous BatchProcessor instances."""
-        return self._store().list(status)
+        return self._jobs.list(status)
 
     def delete_iterator_job(self, job_id: str) -> bool:
         """deleteIteratorJob (index.ts:341-348): terminal jobs only. A
         deleted job is unknown afterwards, attached or not."""
-        deleted = self._store().delete(job_id)
+        deleted = self._jobs.delete(job_id)
         if deleted:
             self._iterators.pop(job_id, None)
         return deleted
-
-    def _store(self):
-        from .iterator import JobStore
-
-        return JobStore(f"{self.root}/jobs")
-
-    def _it(self, job_id: str) -> TableIterator:
-        if job_id not in self._iterators:
-            if self._store().exists(job_id):
-                raise KeyError(
-                    f"iterator job {job_id!r} has persisted state but no attached "
-                    f"source in this instance — call attach_iterator(job_id, source, key_col)"
-                )
-            raise KeyError(f"unknown iterator job {job_id!r}")
-        return self._iterators[job_id]

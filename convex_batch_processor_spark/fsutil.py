@@ -15,7 +15,20 @@ control-plane operations (a handful per flush/vacuum), never per-row.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def check_name(kind: str, name: str) -> str:
+    """``name`` unchanged if it is exactly one path component, else
+    ValueError. Caller-supplied ids become file or directory names under
+    a state dir; an empty id, ``.``, ``..`` or a separator would land
+    outside it (or in a subdirectory that was never created)."""
+    if name in ("", ".", "..") or "/" in name or os.sep in name:
+        raise ValueError(f"{kind} {name!r} must be one path component "
+                         "(non-empty, not '.' or '..', no path separator)")
+    return name
 
 
 def _fs_path(spark: SparkSession, path: str):

@@ -15,7 +15,8 @@ Spark design:
   chunk cost does not grow with table size. At 100 TB you'd additionally
   precompute range boundaries once (approxQuantile) instead of per-chunk
   TakeOrdered; both forms below.
-- **Job state** lives in a JSON file per job (atomic rename) — the control
+- **Job state** lives in a JSON file per job (atomic rename) in
+  ``JobStore``, which also owns the lifecycle transitions — the control
   plane is driver-side metadata exactly like streaming checkpoints; the
   data path stays fully distributed (the callback receives the chunk
   DataFrame, which it may write/aggregate cluster-wide; collecting is the
@@ -39,9 +40,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fsutil import check_name
 from .sources.registry import HandleRegistry, default_registry
-
-STATUSES = ("pending", "running", "paused", "completed", "failed")
 
 
 def backoff_ms(retry_count: int) -> int:
@@ -133,7 +133,8 @@ def _decode_key(v):
 
 
 class JobStore:
-    """Atomic JSON-file-per-job state store (the iteratorJobs table).
+    """Atomic JSON-file-per-job state store (the iteratorJobs table) and
+    the lifecycle transitions on it, which need no source DataFrame.
 
     Driver-local by design: job state is single-writer driver control
     state (the reference keeps it in its transactional store,
@@ -145,7 +146,7 @@ class JobStore:
         os.makedirs(state_dir, exist_ok=True)
 
     def _path(self, job_id: str) -> str:
-        return os.path.join(self.state_dir, f"{job_id}.json")
+        return os.path.join(self.state_dir, f"{check_name('iterator job id', job_id)}.json")
 
     def exists(self, job_id: str) -> bool:
         return os.path.exists(self._path(job_id))
@@ -157,8 +158,11 @@ class JobStore:
         os.replace(tmp, self._path(state.job_id))  # atomic: readers never see partial writes
 
     def load(self, job_id: str) -> IteratorJobState:
-        with open(self._path(job_id)) as f:
-            return IteratorJobState.from_dict(json.load(f))
+        try:
+            with open(self._path(job_id)) as f:
+                return IteratorJobState.from_dict(json.load(f))
+        except FileNotFoundError:
+            raise KeyError(f"unknown iterator job {job_id!r}") from None
 
     def delete(self, job_id: str) -> bool:
         """deleteIteratorJob (lib.ts:927-945): only terminal jobs."""
@@ -180,10 +184,49 @@ class JobStore:
                     out.append(st)
         return out
 
+    def _transition(self, job_id: str, allowed: tuple[str, ...], to: str,
+                    **patch) -> IteratorJobState:
+        st = self.load(job_id)
+        if st.status not in allowed:
+            expected = " or ".join(map(repr, allowed))
+            raise ValueError(f"job {job_id!r} is {st.status!r}, expected {expected}")
+        st.status = to
+        st.__dict__.update(patch)
+        self.save(st)
+        return st
+
+    def pause(self, job_id: str) -> IteratorJobState:
+        """pauseIterator (lib.ts:784-806): running → paused; takes effect at
+        the next chunk boundary (cooperative, like the status guard at
+        lib.ts:978-981)."""
+        return self._transition(job_id, ("running",), "paused")
+
+    def resume(self, job_id: str) -> IteratorJobState:
+        """resumeIterator (lib.ts:808-833): paused → running, retry reset."""
+        return self._transition(job_id, ("paused",), "running", retry_count=0)
+
+    def cancel(self, job_id: str) -> IteratorJobState:
+        """cancelIterator (lib.ts:835-858): mark failed 'Cancelled by user'."""
+        return self._transition(job_id, ("running", "paused", "pending"), "failed",
+                                error_message="Cancelled by user")
+
+    def status(self, job_id: str) -> dict:
+        """getIteratorStatus (lib.ts:860-896) projection."""
+        st = self.load(job_id)
+        return {
+            "job_id": st.job_id,
+            "status": st.status,
+            "processed_count": st.processed_count,
+            "cursor": st.cursor,
+            "retry_count": st.retry_count,
+            "error_message": st.error_message,
+        }
+
 
 class TableIterator:
-    """Drives chunked iteration over an ordered DataFrame with the
-    reference's job lifecycle (start/pause/resume/cancel/status/run)."""
+    """Drives chunked iteration over an ordered DataFrame: ``start`` plans
+    and persists a job, ``run`` is the chunk loop. Lifecycle transitions
+    and status live on ``store``."""
 
     def __init__(
         self,
@@ -199,8 +242,6 @@ class TableIterator:
         self.registry = registry or default_registry
         self.sleep_fn = sleep_fn
 
-    # --- lifecycle mutations (lib.ts:736-945) -------------------------------
-
     def start(
         self,
         job_id: str,
@@ -210,44 +251,36 @@ class TableIterator:
         max_retries: int = 5,
         on_complete: str | None = None,
         plan_ranges: bool | None = None,
-        num_chunks: int | None = None,
-        validate_key: bool | str = True,
-        validate_sample_fraction: float = 0.01,
     ) -> IteratorJobState:
         """startIteratorJob (lib.ts:736-782): duplicate-id reject + insert
         running job.
 
-        ``plan_ranges`` is the 100 TB cursor strategy: compute chunk
-        boundaries ONCE via approxQuantile (one cheap sampling pass), then
-        every chunk is a pure range filter — row-group pruning on a sorted
-        layout, no per-chunk TakeOrdered over the remainder of the table.
-        Default ``None`` auto-enables it when the key column is numeric
+        ``plan_ranges`` is the 100 TB cursor strategy: compute
+        ``ceil(rows / batch_size)`` chunk boundaries ONCE via
+        approxQuantile (one cheap sampling pass), then every chunk is a
+        pure range filter — row-group pruning on a sorted layout, no
+        per-chunk TakeOrdered over the remainder of the table. Default
+        ``None`` auto-enables it when the key column is numeric
         (approxQuantile's requirement); pass ``False`` to force the
         orderBy+limit cursor pager, which re-sorts the tail every chunk —
         fine at test scale, O(n·chunks) at cluster scale.
 
-        ``validate_key`` guards the two properties that silently lose rows
-        when violated — scoped to what each cursor strategy actually needs:
+        The key is validated for the two properties that silently lose
+        rows when violated — scoped to what each cursor strategy needs:
 
         - NULL keys are load-bearing in BOTH modes (a NULL never matches a
           range/page predicate; ``F.max`` ignores it, stalling the cursor).
           The check is ``count(1) vs count(key)`` — one map-side aggregate,
-          no shuffle of data rows. Always run unless ``validate_key=False``.
+          no shuffle of data rows; its row count also sizes the ranges.
         - Key UNIQUENESS only matters in cursor mode: the strict
           ``key > cursor`` page predicate skips duplicates that straddle a
           chunk boundary. Planned-range mode partitions the key space with
           inclusive bounds, so every duplicate lands in exactly one range —
           no check needed, which is why the default (planned) path costs no
-          uniqueness pass at any scale. When cursor mode IS requested:
-          ``validate_key=True`` runs an exact duplicate probe
-          (``groupBy(key).count() > 1 LIMIT 1`` — partial aggregation means
-          the shuffle carries one row per DISTINCT key, not an Expand of
-          the table like ``countDistinct`` alongside ``count`` would);
-          ``validate_key="sample"`` probes a ~1 % sample instead (cheap,
-          but only catches heavily-duplicated keys — a clean sample proves
-          little; use for very large cursor-mode sources where the exact
-          probe is unwanted); ``validate_key=False`` skips (documented
-          unique key, caller's responsibility).
+          uniqueness pass at any scale. Cursor mode runs an exact duplicate
+          probe (``groupBy(key).count() > 1 LIMIT 1`` — partial aggregation
+          means the shuffle carries one row per DISTINCT key, not an Expand
+          of the table like ``countDistinct`` alongside ``count`` would).
         """
         if self.store.exists(job_id):
             raise ValueError(f"Iterator job with ID '{job_id}' already exists")
@@ -257,51 +290,44 @@ class TableIterator:
                 "tinyint", "smallint", "int", "bigint", "float", "double"
             ) or ktype.startswith("decimal")
         key = F.col(self.key_col)
-        n = None
-        if validate_key:
-            stats = self.source.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(key).alias("n_nonnull"),
-            ).collect()[0]
-            if stats["n_nonnull"] != stats["n"]:
-                raise ValueError(
-                    f"key column {self.key_col!r} has "
-                    f"{stats['n'] - stats['n_nonnull']} NULLs — a NULL key can "
-                    "never be paged past (cursor would stall); clean or choose "
-                    "another key"
-                )
-            n = stats["n"]
-            if not plan_ranges:
-                probe = self.source.select(key.alias("k"))
-                if validate_key == "sample":
-                    probe = probe.sample(fraction=validate_sample_fraction, seed=7)
-                dup = (
-                    probe.groupBy("k")
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .collect()
-                )
-                if dup:
-                    raise ValueError(
-                        f"key column {self.key_col!r} is not unique (e.g. key "
-                        f"{dup[0]['k']!r} appears {dup[0]['count']} times) — a "
-                        "duplicate key on a chunk boundary would be skipped by "
-                        "the strict cursor predicate; use plan_ranges=True or "
-                        "a unique key"
-                    )
+        stats = self.source.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(key).alias("n_nonnull"),
+        ).collect()[0]
+        n = stats["n"]
+        if stats["n_nonnull"] != n:
+            raise ValueError(
+                f"key column {self.key_col!r} has "
+                f"{n - stats['n_nonnull']} NULLs — a NULL key can "
+                "never be paged past (cursor would stall); clean or choose "
+                "another key"
+            )
         bounds = None
         if plan_ranges:
-            if num_chunks is None:
-                if n is None:
-                    n = self.source.count()
-                num_chunks = max(1, -(-n // batch_size))
-            probs = [i / num_chunks for i in range(1, num_chunks)]
+            ranges = max(1, -(-n // batch_size))
+            probs = [i / ranges for i in range(1, ranges)]
             bounds = (
                 self.source.stat.approxQuantile(self.key_col, probs, 0.001)
                 if probs
                 else []
             )
+        else:
+            dup = (
+                self.source.select(key.alias("k"))
+                .groupBy("k")
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .collect()
+            )
+            if dup:
+                raise ValueError(
+                    f"key column {self.key_col!r} is not unique (e.g. key "
+                    f"{dup[0]['k']!r} appears {dup[0]['count']} times) — a "
+                    "duplicate key on a chunk boundary would be skipped by "
+                    "the strict cursor predicate; use plan_ranges=True or "
+                    "a unique key"
+                )
         st = IteratorJobState(
             job_id=job_id,
             status="running",
@@ -316,47 +342,6 @@ class TableIterator:
         self.store.save(st)
         return st
 
-    def _guarded_transition(self, job_id: str, expect: str, to: str, **patch) -> IteratorJobState:
-        st = self.store.load(job_id)
-        if st.status != expect:
-            raise ValueError(f"job {job_id!r} is {st.status!r}, expected {expect!r}")
-        st.status = to
-        st.__dict__.update(patch)
-        self.store.save(st)
-        return st
-
-    def pause(self, job_id: str) -> IteratorJobState:
-        """pauseIterator (lib.ts:784-806): running → paused; takes effect at
-        the next chunk boundary (cooperative, like the status guard at
-        lib.ts:978-981)."""
-        return self._guarded_transition(job_id, "running", "paused")
-
-    def resume(self, job_id: str) -> IteratorJobState:
-        """resumeIterator (lib.ts:808-833): paused → running, retry reset."""
-        return self._guarded_transition(job_id, "paused", "running", retry_count=0)
-
-    def cancel(self, job_id: str) -> IteratorJobState:
-        """cancelIterator (lib.ts:835-858): mark failed 'Cancelled by user'."""
-        st = self.store.load(job_id)
-        if st.status not in ("running", "paused", "pending"):
-            raise ValueError(f"cannot cancel job in status {st.status!r}")
-        st.status = "failed"
-        st.error_message = "Cancelled by user"
-        self.store.save(st)
-        return st
-
-    def status(self, job_id: str) -> dict:
-        """getIteratorStatus (lib.ts:860-896) projection."""
-        st = self.store.load(job_id)
-        return {
-            "job_id": st.job_id,
-            "status": st.status,
-            "processed_count": st.processed_count,
-            "cursor": st.cursor,
-            "retry_count": st.retry_count,
-            "error_message": st.error_message,
-        }
-
     # --- the chunk loop (processNextBatch, lib.ts:968-1071) -----------------
 
     def _next_chunk(self, st: IteratorJobState) -> DataFrame:
@@ -369,7 +354,7 @@ class TableIterator:
 
         NULL keys are excluded in both modes (they cannot be paged past —
         ``key > cursor`` is never true and F.max skips them, stalling the
-        cursor); ``start(validate_key=True)`` rejects them up front.
+        cursor); ``start`` rejects them up front.
         """
         key = F.col(self.key_col)
         df = self.source.filter(key.isNotNull())

@@ -48,6 +48,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_converter, _make_type_verifier
@@ -124,6 +125,59 @@ def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataF
     return spark.createDataFrame(table, schema=schema)
 
 
+@dataclass(frozen=True)
+class _Staging:
+    """One snapshot of an accumulator's bookkeeping, read once per view
+    call: every epoch the stream ADMITTED with its staging-file basenames
+    (checkpoint source log), the epochs whose commit landed (checkpoint
+    commits/), and one staging listing (basename -> mtime). Every derived
+    set below comes from this one read, so the views cannot disagree."""
+
+    epochs: dict[int, set[str]]
+    committed: set[int]
+    files: dict[str, float]
+
+    @property
+    def next_seq(self) -> int:
+        """Sequence of the accumulating batch: the next epoch id."""
+        return max(self.epochs) + 1 if self.epochs else 0
+
+    def committed_files(self) -> set[str]:
+        """Listed staging files that belong to COMMITTED epochs."""
+        names = set().union(*(self.epochs.get(e, set()) for e in self.committed))
+        return names & self.files.keys()
+
+    def pending_files(self) -> set[str]:
+        """Listed parquet files not admitted by ANY epoch — the
+        accumulating batch's contents."""
+        admitted = set().union(*self.epochs.values())
+        return {n for n in self.files if n.endswith(".parquet") and n not in admitted}
+
+    def markers(self, prefix: str) -> set[int]:
+        """Sequences carrying a ``{prefix}{seq}`` deletion marker in staging.
+
+        ``_deleted_{seq}``: the COMMITTED batch document was deleted
+        (lib.ts:300-337 deletes the batch doc itself, so the batch
+        disappears from getAllBatchesForBaseId). The epoch number lives
+        immutably in the checkpoint source log, so deletion is recorded
+        as a marker file; list_batches omits marked sequences and
+        delete_batch reports them not-found.
+
+        ``_deleted_acc_{seq}``: the EMPTY ACCUMULATING batch doc was
+        deleted. Unlike committed tombstones these are conditional: they
+        only suppress the accumulating entry while it stays empty — the
+        reference recreates the batch doc when items arrive again, so
+        staged ROWS (zero-row files don't count — same emptiness
+        predicate as delete_batch) or an admitted epoch under the same
+        sequence void the marker (it is simply ignored for any sequence
+        other than the CURRENT empty next_seq).
+
+        The ``_deleted_`` prefix never picks up an ``_deleted_acc_``
+        marker: ``acc_N`` is not a number."""
+        tails = (n[len(prefix):] for n in self.files if n.startswith(prefix))
+        return {int(t) for t in tails if t.isascii() and t.isdecimal()}
+
+
 @dataclass
 class BatchAccumulator:
     """One accumulator = one logical batch stream (a reference ``baseBatchId``).
@@ -181,16 +235,22 @@ class BatchAccumulator:
 
     # --- flush machinery ----------------------------------------------------
 
-    def _read_stream(self) -> DataFrame:
-        reader = (
-            self.spark.readStream.schema(self.item_schema)
-            .format("parquet")
-        )
+    def _start_stream(self, query_name: str, **trigger) -> StreamingQuery:
+        """The accumulating stream: staged files -> ``_foreach_batch``,
+        checkpointed, under the given trigger."""
+        reader = self.spark.readStream.schema(self.item_schema).format("parquet")
         if self.immediate_flush_threshold is not None:
             # admission control ≈ size trigger: an epoch closes once this
             # many staged files are admitted (D1 size path)
             reader = reader.option("maxFilesPerTrigger", self.immediate_flush_threshold)
-        return reader.load(self.staging_dir)
+        return (
+            reader.load(self.staging_dir)
+            .writeStream.foreachBatch(self._foreach_batch)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**trigger)
+            .queryName(query_name)
+            .start()
+        )
 
     def _record_history(self, epoch_id: int, item_count: int, duration_ms: int,
                         success: bool, error: str | None) -> None:
@@ -253,14 +313,8 @@ class BatchAccumulator:
         if not self._ensure_staging():
             return False
         self.registry.resolve(self.process_batch)  # fail fast on bad handle names
-        q = (
-            self._read_stream()
-            .writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .queryName(f"flush-{self.batch_id}-{uuid.uuid4().hex[:8]}")
-            .start()
-        )
+        q = self._start_stream(f"flush-{self.batch_id}-{uuid.uuid4().hex[:8]}",
+                               availableNow=True)
         try:
             q.awaitTermination()
         except Exception as exc:  # StreamingQueryException → retryable flush failure
@@ -276,14 +330,8 @@ class BatchAccumulator:
         if not self._ensure_staging():
             fsutil.mkdirs(self.spark, self.staging_dir)
             # streaming parquet source requires at least the directory
-        return (
-            self._read_stream()
-            .writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=f"{self.flush_interval_s} seconds")
-            .queryName(f"accumulate-{self.batch_id}")
-            .start()
-        )
+        return self._start_stream(f"accumulate-{self.batch_id}",
+                                  processingTime=f"{self.flush_interval_s} seconds")
 
     # --- D8 retention: delete flushed staging files -------------------------
 
@@ -331,34 +379,53 @@ class BatchAccumulator:
                 )
         return out
 
-    def _committed_epochs(self) -> set[int]:
-        """Epoch ids whose foreachBatch commit landed (checkpoint commits/)."""
+    def _staging(self) -> _Staging:
+        """The one bookkeeping read behind each view (see ``_Staging``)."""
         commits_dir = os.path.join(self.checkpoint_dir, "commits")
-        return {int(n) for n in fsutil.listdir(self.spark, commits_dir) if n.isdigit()}
+        return _Staging(
+            epochs=self._source_epoch_files(),
+            committed={int(n) for n in fsutil.listdir(self.spark, commits_dir) if n.isdigit()},
+            # one listStatus snapshot: names AND mtimes together (no
+            # per-file stat round-trips, no stat-after-delete race)
+            files=fsutil.list_statuses(self.spark, self.staging_dir),
+        )
 
-    def _committed_files(self) -> set[str]:
-        """BASENAMES of staging files belonging to COMMITTED epochs."""
-        by_epoch = self._source_epoch_files()
-        names: set[str] = set()
-        for epoch in self._committed_epochs():
-            names |= by_epoch.get(epoch, set())
-        return names
+    def _row_counts(self, names) -> dict[str, int]:
+        """Row count per staging parquet file among ``names``: ONE Spark
+        job for all of them (a listing must not cost O(epochs) jobs), and
+        none when there is no parquet file. Zero-row files do not appear.
+        ``ignoreMissingFiles``: a concurrent vacuum or delete_batch may
+        remove a file between the caller's listing and this read — a
+        control-plane count must degrade, not crash."""
+        from urllib.parse import unquote, urlparse
 
-    def vacuum_staging(self, dry_run: bool = False) -> list[str]:
+        paths = [
+            os.path.join(self.staging_dir, n) for n in sorted(names) if n.endswith(".parquet")
+        ]
+        if not paths:
+            return {}
+        rows = (
+            self.spark.read.schema(self.item_schema)
+            .option("ignoreMissingFiles", "true")
+            .parquet(*paths)
+            .groupBy(F.input_file_name().alias("_f"))
+            .count()
+            .collect()
+        )
+        return {os.path.basename(unquote(urlparse(r["_f"]).path)): r["count"] for r in rows}
+
+    def vacuum_staging(self) -> list[str]:
         """Delete staging files whose epochs are COMMITTED (the reference
         deletes flushed batchItems, lib.ts:622-634). Uncommitted epochs
         (failed flushes pending retry) keep their files, preserving
-        at-least-once. Returns the deleted (or would-delete) paths.
+        at-least-once. Returns the deleted paths.
         """
-        committed = self._committed_files()
         doomed = [
             os.path.join(self.staging_dir, name)
-            for name in fsutil.listdir(self.spark, self.staging_dir)
-            if name in committed
+            for name in sorted(self._staging().committed_files())
         ]
-        if not dry_run:
-            for p in doomed:
-                fsutil.delete(self.spark, p)
+        for p in doomed:
+            fsutil.delete(self.spark, p)
         return doomed
 
     # --- views (getBatchStatus / getFlushHistory parity) --------------------
@@ -380,62 +447,6 @@ class BatchAccumulator:
         df = df.orderBy(F.col("flushed_at").desc(), F.col("epoch_id").desc())
         return df.limit(limit) if limit is not None else df
 
-    def _count_staged(self, names: set[str]) -> int:
-        """Row count across a set of staging-file basenames (0 if empty).
-        ``ignoreMissingFiles``: a concurrent vacuum or delete_batch may
-        remove a file between the caller's listing snapshot and this
-        read — a control-plane count must degrade, not crash."""
-        paths = [
-            os.path.join(self.staging_dir, n) for n in names if n.endswith(".parquet")
-        ]
-        if not paths:
-            return 0
-        return (
-            self.spark.read.schema(self.item_schema)
-            .option("ignoreMissingFiles", "true")
-            .parquet(*paths)
-            .count()
-        )
-
-    @staticmethod
-    def _pending_names(by_epoch: dict[int, set[str]], existing: set[str]) -> set[str]:
-        """Staged parquet basenames not admitted by ANY epoch — the
-        accumulating batch's contents (shared by list_batches and
-        delete_batch so the two APIs can never disagree)."""
-        admitted: set[str] = set().union(*by_epoch.values()) if by_epoch else set()
-        return {n for n in existing - admitted if n.endswith(".parquet")}
-
-    @staticmethod
-    def _markers(existing: set[str], prefix: str) -> set[int]:
-        """Sequences carrying a ``{prefix}{seq}`` deletion marker in staging.
-
-        ``_deleted_{seq}``: the COMMITTED batch document was deleted
-        (lib.ts:300-337 deletes the batch doc itself, so the batch
-        disappears from getAllBatchesForBaseId). The epoch number lives
-        immutably in the checkpoint source log, so deletion is recorded
-        as a marker file; list_batches omits marked sequences and
-        delete_batch reports them not-found.
-
-        ``_deleted_acc_{seq}``: the EMPTY ACCUMULATING batch doc was
-        deleted. Unlike committed tombstones these are conditional: they
-        only suppress the accumulating entry while it stays empty — the
-        reference recreates the batch doc when items arrive again, so
-        staged ROWS (zero-row files don't count — same emptiness
-        predicate as delete_batch) or an admitted epoch under the same
-        sequence void the marker (it is simply ignored for any sequence
-        other than the CURRENT empty next_seq).
-
-        The ``_deleted_`` prefix never picks up an ``_deleted_acc_``
-        marker: ``int("acc_N")`` does not parse."""
-        out: set[int] = set()
-        for n in existing:
-            if n.startswith(prefix):
-                try:
-                    out.add(int(n[len(prefix):]))
-                except ValueError:
-                    pass
-        return out
-
     def list_batches(self) -> list[dict]:
         """getAllBatchesForBaseId (lib.ts:246-277) over the epoch model:
         ``sequence`` ≡ foreachBatch ``epoch_id`` (D6), ``batch_id`` is the
@@ -455,48 +466,24 @@ class BatchAccumulator:
         (lib.ts:259-267)."""
         if not self._ensure_staging():
             return []  # nothing ever staged → no batch docs (lib.ts:251-253)
-        from urllib.parse import unquote, urlparse
-
-        by_epoch = self._source_epoch_files()
-        committed = self._committed_epochs()
-        # one listStatus snapshot: names AND mtimes together (no per-file
-        # stat round-trips, no stat-after-delete race)
-        statuses = fsutil.list_statuses(self.spark, self.staging_dir)
-        existing = set(statuses)
+        s = self._staging()
         hist_at: dict[int, dt.datetime] = {}
         for r in self.flush_history().collect():
             hist_at.setdefault(r.epoch_id, r.flushed_at)  # newest-first order
-
-        # ONE Spark job for every per-file row count — a listing must not
-        # cost O(epochs) jobs; zero-row/vanished files simply don't appear
-        counts: dict[str, int] = {}
-        live_parquet = sorted(n for n in existing if n.endswith(".parquet"))
-        if live_parquet:
-            rows = (
-                self.spark.read.schema(self.item_schema)
-                .option("ignoreMissingFiles", "true")
-                .parquet(*[os.path.join(self.staging_dir, n) for n in live_parquet])
-                .groupBy(F.input_file_name().alias("_f"))
-                .count()
-                .collect()
-            )
-            counts = {
-                os.path.basename(unquote(urlparse(r["_f"]).path)): r["count"]
-                for r in rows
-            }
+        counts = self._row_counts(s.files)
 
         # The reference's batch doc ALWAYS carries createdAt (schema.ts) —
         # an empty accumulating batch (no staged files, no history row)
         # must still report a concrete timestamp, not None: fall back to
         # the newest staging-dir mtime, else now (batch doc creation time)
         dir_fallback = (
-            dt.datetime.fromtimestamp(max(statuses.values()))
-            if statuses else dt.datetime.now()
+            dt.datetime.fromtimestamp(max(s.files.values()))
+            if s.files else dt.datetime.now()
         )
 
         def entry(seq: int, names: set[str], status: str) -> dict:
-            live = names & existing
-            times = [statuses[n] for n in live]
+            live = names & s.files.keys()
+            times = [s.files[n] for n in live]
             fallback = hist_at.get(seq) or dir_fallback
             return {
                 "batch_id": f"{self.batch_id}::{seq}",
@@ -508,14 +495,13 @@ class BatchAccumulator:
                 "last_updated_at": dt.datetime.fromtimestamp(max(times)) if times else fallback,
             }
 
-        deleted = self._markers(existing, "_deleted_")
+        deleted = s.markers("_deleted_")
         out = [
-            entry(seq, names, "completed" if seq in committed else "flushing")
-            for seq, names in sorted(by_epoch.items())
+            entry(seq, names, "completed" if seq in s.committed else "flushing")
+            for seq, names in sorted(s.epochs.items())
             if seq not in deleted  # deleted batch docs vanish (lib.ts:300-337)
         ]
-        next_seq = max(by_epoch) + 1 if by_epoch else 0
-        pending = self._pending_names(by_epoch, existing)
+        pending = s.pending_files()
         # a deleted EMPTY accumulating batch stays hidden until ITEMS
         # arrive again (the reference recreates the doc on the next add).
         # "Empty" is the same predicate delete_batch uses — zero ROWS, not
@@ -523,8 +509,8 @@ class BatchAccumulator:
         # frame) has no items, so it neither blocks the delete there nor
         # voids the marker here.
         pending_rows = sum(counts.get(n, 0) for n in pending)
-        if pending_rows > 0 or next_seq not in self._markers(existing, "_deleted_acc_"):
-            out.append(entry(next_seq, pending, "accumulating"))
+        if pending_rows > 0 or s.next_seq not in s.markers("_deleted_acc_"):
+            out.append(entry(s.next_seq, pending, "accumulating"))
         return out
 
     def delete_batch(self, sequence: int) -> dict:
@@ -534,25 +520,22 @@ class BatchAccumulator:
         survive, exactly as the reference keeps flushHistory."""
         if not self._ensure_staging():
             return {"deleted": False, "reason": "Batch not found"}
-        by_epoch = self._source_epoch_files()
-        committed = self._committed_epochs()
-        existing = set(fsutil.listdir(self.spark, self.staging_dir))
-        next_seq = max(by_epoch) + 1 if by_epoch else 0
-        if sequence not in by_epoch and sequence != next_seq:
+        s = self._staging()
+        if sequence not in s.epochs and sequence != s.next_seq:
             return {"deleted": False, "reason": "Batch not found"}
-        if sequence in self._markers(existing, "_deleted_"):
+        if sequence in s.markers("_deleted_"):
             # batch doc already deleted — the reference's second delete
             # hits a missing document (lib.ts:304-306)
             return {"deleted": False, "reason": "Batch not found"}
-        if sequence in by_epoch and sequence not in committed:
+        if sequence in s.epochs and sequence not in s.committed:
             # admitted but no commit: a flush is in flight (or failed and
             # pending its at-least-once retry) — deleting its files would
             # corrupt the replay (lib.ts:312-314)
             return {"deleted": False, "reason": "Cannot delete batch while flushing"}
-        if sequence == next_seq:
-            if self._count_staged(self._pending_names(by_epoch, existing)) > 0:
+        if sequence == s.next_seq:
+            if sum(self._row_counts(s.pending_files()).values()) > 0:
                 return {"deleted": False, "reason": "Cannot delete batch with pending items"}
-            if sequence in self._markers(existing, "_deleted_acc_"):
+            if sequence in s.markers("_deleted_acc_"):
                 # already deleted and still empty — the doc is gone until
                 # items arrive and recreate it (lib.ts:304-306)
                 return {"deleted": False, "reason": "Batch not found"}
@@ -566,7 +549,7 @@ class BatchAccumulator:
                 overwrite=True,
             )
             return {"deleted": True}
-        for name in by_epoch.get(sequence, set()) & existing:
+        for name in s.epochs.get(sequence, set()) & s.files.keys():
             fsutil.delete(self.spark, os.path.join(self.staging_dir, name))
         # tombstone AFTER the item deletes: the batch doc disappears from
         # getAllBatchesForBaseId (lib.ts deletes the doc itself); flush
@@ -588,14 +571,8 @@ class BatchAccumulator:
         demand, never stored (T3/schema.ts:9)."""
         staged = 0
         if self._ensure_staging():
-            committed = self._committed_files()
-            staged = self._count_staged(
-                {
-                    f
-                    for f in fsutil.listdir(self.spark, self.staging_dir)
-                    if f not in committed
-                }
-            )
+            s = self._staging()
+            staged = sum(self._row_counts(s.files.keys() - s.committed_files()).values())
         hist = self.flush_history()
         agg = hist.agg(
             F.count(F.lit(1)).alias("attempts"),

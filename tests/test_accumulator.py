@@ -188,11 +188,12 @@ def test_vacuum_staging_removes_only_committed_files(spark, tmp_path):
     acc.flush_now()
     acc.add_items(events(2, start=100))  # staged but NOT flushed yet
 
-    doomed = acc.vacuum_staging(dry_run=True)
+    doomed = acc.vacuum_staging()
     assert len(doomed) == 1  # only the flushed add-file
-    acc.vacuum_staging()
+    assert not os.path.exists(doomed[0])
     remaining = [f for f in os.listdir(acc.staging_dir) if f.endswith(".parquet")]
     assert len(remaining) == 1  # the unflushed add survives
+    assert remaining[0] != os.path.basename(doomed[0])
 
     seen.clear()
     acc.flush_now()

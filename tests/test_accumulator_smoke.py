@@ -6,6 +6,7 @@ the slow tier; this keeps their core path in every default run."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import types as T
@@ -62,3 +63,31 @@ def test_add_flush_replay_status_vacuum(spark, tmp_path):
     assert len(deleted) == 1  # the one file the add staged
     assert not [f for f in os.listdir(acc.staging_dir) if f.endswith(".parquet")]
     assert bp.get_batch_status("events")["staged_item_count"] == 0
+
+
+def test_timed_out_wait_keeps_running_flush_tracked(spark, tmp_path):
+    """wait_for_flushes(timeout_s) returns at its deadline, but a flush
+    still running stays tracked, so the next wait joins it."""
+    entered, release = threading.Event(), threading.Event()
+
+    def handle(df, epoch_id):
+        entered.set()
+        release.wait(120)
+
+    reg = HandleRegistry()
+    reg.add("blocking", handle)
+    bp = BatchProcessor(spark=spark, root=str(tmp_path), registry=reg)
+    bp.accumulator("slow", SCHEMA, "blocking")
+    bp.add_items("slow", [{"event_id": 1, "name": "a"}])
+    try:
+        assert bp.flush("slow", block=False) is True
+        assert entered.wait(120)
+        bp.wait_for_flushes("slow", timeout_s=0.1)
+        [t] = bp._flush_threads["slow"]
+        assert t.is_alive()
+    finally:
+        release.set()
+    bp.wait_for_flushes("slow", timeout_s=120)
+    assert not t.is_alive()
+    assert "slow" not in bp._flush_threads
+    assert bp.get_batch_status("slow")["flushed_items"] == 1

@@ -72,12 +72,12 @@ def test_pause_takes_effect_at_chunk_boundary_and_resume_continues(tmp_path, cus
     it.start("j", "migrate", batch_size=50, plan_ranges=False)
 
     it.run("j", max_chunks=1)
-    it.pause("j")
+    it.store.pause("j")
     st = it.run("j")  # guard stops immediately
     assert st.status == "paused"
     assert len(seen) == 50
 
-    it.resume("j")
+    it.store.resume("j")
     st = it.run("j")
     assert st.status == "completed"
     assert len(seen) == customer.count()  # no rows skipped or repeated
@@ -90,7 +90,7 @@ def test_cancel_marks_failed(tmp_path, customer):
     it = make_iter(tmp_path, customer, reg, [])
     it.start("j", "migrate")
     it.run("j", max_chunks=1)
-    st = it.cancel("j")
+    st = it.store.cancel("j")
     assert st.status == "failed" and st.error_message == "Cancelled by user"
     assert it.run("j").status == "failed"  # guard refuses to continue
 
@@ -147,11 +147,6 @@ def test_start_rejects_null_and_duplicate_keys(tmp_path, customer):
     it = TableIterator(str(tmp_path / "d"), dup, "k", registry=reg, sleep_fn=lambda s: None)
     with pytest.raises(ValueError, match="not unique"):
         it.start("j", "noop", plan_ranges=False)
-    with pytest.raises(ValueError, match="not unique"):
-        # heavy duplication (2 distinct keys): a half-sample is guaranteed
-        # to contain a duplicate pair (150 rows -> ~75 sampled)
-        it.start("j2", "noop", plan_ranges=False, validate_key="sample",
-                 validate_sample_fraction=0.5)
     nullable = customer.select(
         F.when(F.col("c_custkey") % 100 == 0, None)
         .otherwise(F.col("c_custkey"))
@@ -200,11 +195,11 @@ def test_status_list_delete(tmp_path, customer):
     it.start("a", "noop", batch_size=10_000)
     it.start("b", "noop", batch_size=10_000)
     assert {s.job_id for s in it.store.list()} == {"a", "b"}
-    assert it.status("a")["status"] == "running"
+    assert it.store.status("a")["status"] == "running"
     with pytest.raises(ValueError, match="cannot delete"):
         it.store.delete("a")  # guard: only terminal jobs deletable
     it.run("a")
-    assert it.status("a")["status"] == "completed"
+    assert it.store.status("a")["status"] == "completed"
     assert it.store.delete("a") is True
     assert {s.job_id for s in it.store.list()} == {"b"}
     assert [s.job_id for s in it.store.list(status="running")] == ["b"]
@@ -225,6 +220,59 @@ def test_deleted_job_is_unknown_to_the_facade(tmp_path, customer):
     with pytest.raises(KeyError, match="unknown iterator job"):
         bp.pause_iterator("gone")
     assert bp.delete_iterator_job("gone") is False
+
+
+def test_lifecycle_on_persisted_jobs_needs_no_attach(tmp_path, customer):
+    """Pause, resume, cancel and status touch stored state only: a second
+    BatchProcessor over the same root applies them to a persisted job it
+    never attached. An unknown id raises the documented KeyError from
+    each of them and from TableIterator.run."""
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, c: None)
+    spark = customer.sparkSession
+    BatchProcessor(spark=spark, root=str(tmp_path), registry=reg).start_iterator(
+        "persisted", customer, "c_custkey", "noop", batch_size=50, run=False
+    )
+    bp = BatchProcessor(spark=spark, root=str(tmp_path), registry=reg)
+    assert bp.pause_iterator("persisted").status == "paused"
+    assert bp.get_iterator_status("persisted")["status"] == "paused"
+    assert bp.resume_iterator("persisted").status == "running"
+    bp.cancel_iterator("persisted")
+    assert bp.get_iterator_status("persisted") == {
+        "job_id": "persisted",
+        "status": "failed",
+        "processed_count": 0,
+        "cursor": 0,
+        "retry_count": 0,
+        "error_message": "Cancelled by user",
+    }
+    with pytest.raises(ValueError, match="expected 'paused'"):
+        bp.resume_iterator("persisted")
+    for call in (bp.get_iterator_status, bp.pause_iterator, bp.resume_iterator,
+                 bp.cancel_iterator, make_iter(tmp_path, customer, reg, []).run):
+        with pytest.raises(KeyError, match="unknown iterator job"):
+            call("nope")
+
+
+@pytest.mark.parametrize("bad_id", ["", ".", "..", "../x", "a/b"])
+def test_ids_must_be_one_path_component(tmp_path, customer, bad_id):
+    """Job and batch ids name files and dirs under {root}: one that is not
+    a single path component is rejected before any Spark job runs (the
+    source below fails any job that evaluates its key) and writes nothing."""
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, c: None)
+    explode = F.udf(lambda k: 1 // 0, "long")
+    poisoned = customer.select(explode("c_custkey").alias("k"))
+    bp = BatchProcessor(spark=customer.sparkSession, root=str(tmp_path / "bp"), registry=reg)
+    with pytest.raises(ValueError, match="one path component"):
+        bp.start_iterator(bad_id, poisoned, "k", "noop")
+    with pytest.raises(ValueError, match="one path component"):
+        bp.get_iterator_status(bad_id)
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    with pytest.raises(ValueError, match="one path component"):
+        bp.accumulator(bad_id, schema, "noop")
+    assert sorted(p.name for p in tmp_path.rglob("*")) == ["bp", "jobs"]
+    assert bp.list_iterator_jobs() == []
 
 
 def test_background_flush_threads_are_pruned(spark, tmp_path):
@@ -268,10 +316,10 @@ def test_range_planned_iteration_processes_every_row_once(tmp_path, customer):
     reg2, seen2 = HandleRegistry(), []
     reg2.add("migrate", lambda df, cur: seen2.extend(r.c_custkey for r in df.collect()))
     it2 = make_iter(tmp_path / "x", customer, reg2, [])
-    it2.start("p2", "migrate", batch_size=40, plan_ranges=True, num_chunks=4)
+    it2.start("p2", "migrate", batch_size=40, plan_ranges=True)
     it2.run("p2", max_chunks=2)
-    it2.pause("p2")
-    it2.resume("p2")
+    it2.store.pause("p2")
+    it2.store.resume("p2")
     assert it2.run("p2").status == "completed"
     assert sorted(seen2) == sorted(seen)
 
@@ -369,7 +417,7 @@ def test_cancel_during_final_chunk_wins_over_completion(tmp_path, customer):
     def migrate(chunk_df, cursor):
         chunk_df.count()
         # simulate another process cancelling mid-final-chunk
-        controller["it"].cancel("cancel-race")
+        controller["it"].store.cancel("cancel-race")
 
     reg.add("on_done", lambda job_id, n: done.append(job_id))
     it = make_iter(tmp_path, customer.limit(30), reg, sleeps)
@@ -456,7 +504,7 @@ def test_pause_during_failing_chunk_is_not_flipped_to_failed(tmp_path, customer)
     @reg.register("migrate")
     def migrate(chunk_df, cursor):
         chunk_df.count()
-        controller["it"].pause("pause-race")
+        controller["it"].store.pause("pause-race")
         raise RuntimeError("handle blew up after the pause landed")
 
     it = make_iter(tmp_path, customer.limit(30), reg, sleeps)
