@@ -12,7 +12,7 @@ micro-batch engine:
 
 | reference                                   | here                                  |
 |---------------------------------------------|---------------------------------------|
-| addItems append-only items log (lib.ts:87)  | parquet files appended to a staging dir (append-only by construction — no write conflicts, T2) |
+| addItems append-only items log (lib.ts:87)  | one driver-written parquet file per add in a staging dir (append-only by construction — no write conflicts, T2; no Spark job) |
 | interval timer per batch (lib.ts:76-83)     | ``trigger(processingTime=...)``       |
 | size-threshold immediate flush (lib.ts:104) | ``maxFilesPerTrigger`` admission + the add path nudging a manual run |
 | manual flush (lib.ts:123-179)               | one-shot ``Trigger.AvailableNow`` run |
@@ -21,7 +21,7 @@ micro-batch engine:
 | at-least-once + retry (lib.ts:694-710)      | foreachBatch failure fails the query; restart replays the SAME epoch from the checkpoint (D5) |
 | batch sequence `base::N` (lib.ts:55-62)     | ``epoch_id`` of foreachBatch (D6)     |
 | single-winner flush races (lib.ts:471-544)  | single streaming writer + checkpoint — races don't exist (D7) |
-| flushHistory audit rows (lib.ts:599-619)    | history parquet appended per epoch attempt (D9) |
+| flushHistory audit rows (lib.ts:599-619)    | one driver-written history parquet file per epoch attempt (D9; no Spark job) |
 | retention: keep newest completed (lib.ts:671-692) | ``cleanup_staging`` rank-and-delete maintenance (D8) |
 
 Scale: the staging dir is the pattern's weak point at 100 TB if files are
@@ -31,8 +31,14 @@ epoch-bounded DataFrame it can repartition/write at any width. On a real
 cluster the staging dir would be object storage + file-notification source,
 or Kafka with ``maxOffsetsPerTrigger`` as the size trigger; the code paths
 are identical. Rows built on the driver (added items, flush-history rows)
-cross to the JVM as one Arrow table (``_local_frame``), so the write that
-follows is a ``LocalTableScan`` and starts no Python worker.
+never become a Spark job: they are checked and converted as
+``createDataFrame`` would, into one Arrow table (``_arrow_table``),
+serialized to parquet in memory and committed through the Hadoop FS API
+as ``part-<uuid>.snappy.parquet`` via a hidden ``_``-prefixed tmp file
+and a rename (``fsutil.write_bytes``). Spark's file listing skips hidden
+names, so a flush never admits a half-written add; the views apply the
+same rule (``_hidden``), so they count and time exactly what a flush can
+admit.
 
 Deterministic tests use ``flush_now`` (AvailableNow) only — no wall-clock.
 """
@@ -93,18 +99,16 @@ def _decimal_rounder(dtype: T.DataType):
     return (lambda v: None if v is None else f(v)) if f else None
 
 
-def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` with an Arrow transport.
+def _arrow_table(rows: list, schema: T.StructType):
+    """``rows`` as the ``pyarrow.Table`` that ``spark.createDataFrame(rows,
+    schema)`` would hold.
 
     Each row takes the same Python steps as the list path — the type
     verifier, the dict/tuple converter, ``StructType.toInternal`` (so a
     naive datetime is still read in the process time zone) and the JVM's
-    HALF_UP decimal rounding — and the internal columns then cross to
-    the JVM as one ``pyarrow.Table``. The plan is a ``LocalTableScan``:
-    the list path's ``parallelize`` builds a ``PythonRDD``, so every job
-    over it started a Python worker just to re-pickle a few rows. One
-    difference: a decimal too wide for its precision raises here
-    (``ArrowInvalid``), not later inside the job that reads the frame."""
+    HALF_UP decimal rounding. One difference: a decimal too wide for its
+    precision raises here (``ArrowInvalid``), not later inside the job
+    that reads the rows."""
     import pyarrow as pa  # noqa: PLC0415
 
     verify = _make_type_verifier(schema)
@@ -121,8 +125,46 @@ def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataF
         if rnd is not None:
             col = [rnd(v) for v in col]
         arrays.append(pa.array(col, type=arrow_type))
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema=schema)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` with an Arrow transport: a
+    ``LocalTableScan``, where the list path's ``parallelize`` builds a
+    ``PythonRDD`` and every job over it starts a Python worker."""
+    return spark.createDataFrame(_arrow_table(rows, schema), schema=schema)
+
+
+def _write_parquet_file(spark: SparkSession, directory: str, rows: list,
+                        schema: T.StructType) -> None:
+    """Commit ``rows`` as one new ``part-<uuid>.snappy.parquet`` file in
+    ``directory``, serialized on the driver: no Spark job. The file
+    carries the footer keys a Spark write sets, so every reader — a
+    schema-less ``spark.read.parquet`` included — sees the same types and
+    reads its datetimes as proleptic Gregorian (no legacy rebase)."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    table = _arrow_table(rows, schema).replace_schema_metadata({
+        "org.apache.spark.version": spark.version,
+        "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+    })
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="snappy")
+    fsutil.write_bytes(
+        spark,
+        os.path.join(directory, f"part-{uuid.uuid4()}.snappy.parquet"),
+        sink.getvalue().to_pybytes(),
+    )
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file listing skips this name, so a flush never admits it:
+    ``_``-prefixed (unless it holds a ``=``, a partition-style name),
+    ``.``-prefixed, or an in-progress ``._COPYING_`` upload. In-flight
+    tmp files, checksums and the deletion markers are all hidden."""
+    return ((name.startswith("_") and "=" not in name) or name.startswith(".")
+            or name.endswith("._COPYING_"))
 
 
 @dataclass(frozen=True)
@@ -130,12 +172,15 @@ class _Staging:
     """One snapshot of an accumulator's bookkeeping, read once per view
     call: every epoch the stream ADMITTED with its staging-file basenames
     (checkpoint source log), the epochs whose commit landed (checkpoint
-    commits/), and one staging listing (basename -> mtime). Every derived
-    set below comes from this one read, so the views cannot disagree."""
+    commits/), and one staging listing split by Spark's hidden-name rule:
+    the files a flush can admit (basename -> mtime) and the hidden names.
+    Every derived set below comes from this one read, so the views cannot
+    disagree with each other or with what a flush admits."""
 
     epochs: dict[int, set[str]]
     committed: set[int]
     files: dict[str, float]
+    hidden: set[str]
 
     @property
     def next_seq(self) -> int:
@@ -148,7 +193,7 @@ class _Staging:
         return names & self.files.keys()
 
     def pending_files(self) -> set[str]:
-        """Listed parquet files not admitted by ANY epoch — the
+        """Visible parquet files not admitted by ANY epoch — the
         accumulating batch's contents."""
         admitted = set().union(*self.epochs.values())
         return {n for n in self.files if n.endswith(".parquet") and n not in admitted}
@@ -174,7 +219,7 @@ class _Staging:
 
         The ``_deleted_`` prefix never picks up an ``_deleted_acc_``
         marker: ``acc_N`` is not a number."""
-        tails = (n[len(prefix):] for n in self.files if n.startswith(prefix))
+        tails = (n[len(prefix):] for n in self.hidden if n.startswith(prefix))
         return {int(t) for t in tails if t.isascii() and t.isdecimal()}
 
 
@@ -220,13 +265,12 @@ class BatchAccumulator:
 
         The items are checked and converted exactly as
         ``createDataFrame(items, item_schema)`` would (a bad item raises
-        before anything is written), then cross to the JVM as one Arrow
-        table: the staging write runs no Python worker."""
+        before anything is written), then written from the driver as one
+        parquet file: an add starts no Spark job."""
         if not items:
             return 0
-        df = _local_frame(self.spark, items, self.item_schema)
         # one file per add: the add is the atomic unit the size trigger counts
-        df.coalesce(1).write.mode("append").parquet(self.staging_dir)
+        _write_parquet_file(self.spark, self.staging_dir, items, self.item_schema)
         return len(items)
 
     def add_dataframe(self, df: DataFrame) -> None:
@@ -254,47 +298,33 @@ class BatchAccumulator:
 
     def _record_history(self, epoch_id: int, item_count: int, duration_ms: int,
                         success: bool, error: str | None) -> None:
-        row = [
-            (
-                self.batch_id,
-                epoch_id,
-                item_count,
-                dt.datetime.now(),
-                duration_ms,
-                success,
-                error,
-            )
-        ]
-        (
-            _local_frame(self.spark, row, FLUSH_HISTORY_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.history_dir)
-        )
+        row = (self.batch_id, epoch_id, item_count, dt.datetime.now(),
+               duration_ms, success, error)
+        _write_parquet_file(self.spark, self.history_dir, [row], FLUSH_HISTORY_SCHEMA)
 
     def _foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Epoch executor ≈ executeFlush (lib.ts:546-597): dispatch the
         registered handle, record history, propagate failure so the
-        checkpoint replays the epoch (at-least-once, D5)."""
+        checkpoint replays the epoch (at-least-once, D5).
+
+        The handle gets the epoch's frame UNCACHED: the pre-count needs
+        no column, so it reads only the admitted files' parquet footers,
+        and the handle's own action is the one full scan. A handle that
+        runs several actions over the frame should ``persist`` it (and
+        ``unpersist`` before returning)."""
         handle = self.registry.resolve(self.process_batch)
-        # cache: the pre-count and the user handle both traverse the epoch;
-        # without this the staged files are scanned twice per flush
-        batch_df.persist()
+        count = batch_df.count()
+        if count == 0:
+            return  # empty-group short-circuit (lib.ts:157-159)
+        start = time.monotonic()
         try:
-            count = batch_df.count()
-            if count == 0:
-                return  # empty-group short-circuit (lib.ts:157-159)
-            start = time.monotonic()
-            try:
-                handle(batch_df, epoch_id)
-            except Exception as e:  # noqa: BLE001
-                dur = int((time.monotonic() - start) * 1000)
-                self._record_history(epoch_id, count, dur, False, f"{type(e).__name__}: {e}")
-                raise
+            handle(batch_df, epoch_id)
+        except Exception as e:  # noqa: BLE001
             dur = int((time.monotonic() - start) * 1000)
-            self._record_history(epoch_id, count, dur, True, None)
-        finally:
-            batch_df.unpersist()
+            self._record_history(epoch_id, count, dur, False, f"{type(e).__name__}: {e}")
+            raise
+        dur = int((time.monotonic() - start) * 1000)
+        self._record_history(epoch_id, count, dur, True, None)
 
     def _ensure_staging(self) -> bool:
         # a parquet stream needs the dir to exist; before any add there is
@@ -342,8 +372,8 @@ class BatchAccumulator:
         through the Hadoop FS API (fsutil) so the root may be an object
         store; comparison is by basename because the source log stores
         percent-encoded URIs while directory listings return raw paths —
-        staging is one flat dir of Spark part-files, whose names are
-        globally unique and URI-safe, so basenames identify exactly.
+        staging is one flat dir of part-files whose names carry a UUID
+        (globally unique and URI-safe), so basenames identify exactly.
 
         COMPACTION: every compactInterval-th (default 10) batch is
         written as ``N.compact`` holding the CUMULATIVE entry list (and
@@ -382,12 +412,14 @@ class BatchAccumulator:
     def _staging(self) -> _Staging:
         """The one bookkeeping read behind each view (see ``_Staging``)."""
         commits_dir = os.path.join(self.checkpoint_dir, "commits")
+        # one listStatus snapshot: names AND mtimes together (no
+        # per-file stat round-trips, no stat-after-delete race)
+        listing = fsutil.list_statuses(self.spark, self.staging_dir)
         return _Staging(
             epochs=self._source_epoch_files(),
             committed={int(n) for n in fsutil.listdir(self.spark, commits_dir) if n.isdigit()},
-            # one listStatus snapshot: names AND mtimes together (no
-            # per-file stat round-trips, no stat-after-delete race)
-            files=fsutil.list_statuses(self.spark, self.staging_dir),
+            files={n: t for n, t in listing.items() if not _hidden(n)},
+            hidden={n for n in listing if _hidden(n)},
         )
 
     def _row_counts(self, names) -> dict[str, int]:
@@ -475,7 +507,8 @@ class BatchAccumulator:
         # The reference's batch doc ALWAYS carries createdAt (schema.ts) —
         # an empty accumulating batch (no staged files, no history row)
         # must still report a concrete timestamp, not None: fall back to
-        # the newest staging-dir mtime, else now (batch doc creation time)
+        # the newest visible staging file's mtime, else now (batch doc
+        # creation time)
         dir_fallback = (
             dt.datetime.fromtimestamp(max(s.files.values()))
             if s.files else dt.datetime.now()
@@ -573,7 +606,9 @@ class BatchAccumulator:
         if self._ensure_staging():
             s = self._staging()
             staged = sum(self._row_counts(s.files.keys() - s.committed_files()).values())
-        hist = self.flush_history()
+        # coalesce(1): the global aggregate then needs no exchange, so it is
+        # one job over the (tiny, control-plane) history rows, not two
+        hist = self.flush_history().coalesce(1)
         agg = hist.agg(
             F.count(F.lit(1)).alias("attempts"),
             F.sum(F.when(F.col("success"), F.col("item_count")).otherwise(0)).alias("flushed_items"),

@@ -246,8 +246,7 @@ def join_view_foreach_batch(
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
         # persist: the two side filters each traverse the micro-batch, and
-        # in foreachBatch every action re-reads the epoch's staged input —
-        # same double-scan the accumulator's _foreach_batch caches away
+        # in foreachBatch every action re-reads the epoch's staged input
         batch_df.persist()
         try:
             da = batch_df.filter(F.col(side_col) == "a").select(view.key_col, *(a_cols or []))

@@ -1,18 +1,23 @@
-"""Default-tier smoke of the batch accumulator through ``BatchProcessor``:
-one add -> flush -> status -> vacuum round whose first epoch attempt
-fails and is replayed. The full accumulator and client suites are in
+"""Default-tier smoke of the batch accumulator: one add -> flush ->
+status -> vacuum round through ``BatchProcessor`` whose first epoch
+attempt fails and is replayed, the Spark jobs the control plane starts,
+and hidden staging files. The full accumulator and client suites are in
 the slow tier; this keeps their core path in every default run."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import shutil
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import types as T
 
 from convex_batch_processor_spark.client import BatchProcessor
 from convex_batch_processor_spark.sources.registry import HandleRegistry
+from convex_batch_processor_spark.streaming.accumulator import BatchAccumulator
 
 SCHEMA = T.StructType(
     [
@@ -91,3 +96,69 @@ def test_timed_out_wait_keeps_running_flush_tracked(spark, tmp_path):
     assert not t.is_alive()
     assert "slow" not in bp._flush_threads
     assert bp.get_batch_status("slow")["flushed_items"] == 1
+
+
+def _collecting_acc(spark, tmp_path, seen: list) -> BatchAccumulator:
+    reg = HandleRegistry()
+    reg.add("collect", lambda df, epoch_id: seen.extend(r.event_id for r in df.collect()))
+    return BatchAccumulator(spark=spark, batch_id="b", root=str(tmp_path),
+                            item_schema=SCHEMA, process_batch="collect", registry=reg)
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts on this thread, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_control_plane_starts_no_spark_job(spark, tmp_path):
+    acc = _collecting_acc(spark, tmp_path, [])
+    assert _jobs_started(spark, lambda: acc.add_items([{"event_id": 1, "name": "a"}])) == 0
+    assert _jobs_started(spark, lambda: acc._record_history(7, 1, 0, True, None)) == 0
+    assert acc.flush_now() is True
+    # the history aggregate is one single-partition job (no exchange)
+    assert _jobs_started(spark, acc.status) == 1
+    assert acc.status()["flush_attempts"] == 2
+
+
+def test_hidden_staging_files_are_not_batch_contents(spark, tmp_path):
+    """Spark's listing skips ``_``/``.``-prefixed names, so a flush never
+    admits them; the views must not count or time them either."""
+    seen: list[int] = []
+    acc = _collecting_acc(spark, tmp_path, seen)
+    acc.add_items([{"event_id": 1, "name": "a"}])
+    [real] = [f for f in os.listdir(acc.staging_dir) if f.endswith(".parquet")
+              and not f.startswith((".", "_"))]
+    t0 = 1_700_000_000
+    os.utime(os.path.join(acc.staging_dir, real), (t0, t0))
+    stray = os.path.join(acc.staging_dir, "_stray.parquet")
+    with open(stray, "wb") as f:
+        f.write(b"not a parquet file")
+    in_flight = os.path.join(acc.staging_dir, f"_part-{uuid.uuid4()}.snappy.parquet.tmp")
+    shutil.copy(os.path.join(acc.staging_dir, real), in_flight)
+    os.utime(stray, (t0 + 3600, t0 + 3600))
+    os.utime(in_flight, (t0 - 3600, t0 - 3600))
+
+    assert acc.status()["staged_item_count"] == 1
+    [batch] = acc.list_batches()
+    assert (batch["status"], batch["item_count"]) == ("accumulating", 1)
+    assert batch["created_at"] == batch["last_updated_at"] == dt.datetime.fromtimestamp(t0)
+
+    assert acc.flush_now() is True
+    assert seen == [1]
+    assert acc.status()["staged_item_count"] == 0
+    done, empty = acc.list_batches()
+    assert (done["status"], done["item_count"]) == ("completed", 1)
+    assert (empty["status"], empty["item_count"]) == ("accumulating", 0)
+    # the empty accumulating batch holds no items, only hidden files
+    assert acc.delete_batch(1) == {"deleted": True}
+    assert acc.delete_batch(0) == {"deleted": True}
+    assert os.path.exists(stray) and os.path.exists(in_flight)

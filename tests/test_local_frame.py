@@ -1,11 +1,15 @@
-"""Arrow transport for the accumulator's driver-built rows
-(``streaming.accumulator._local_frame``).
+"""The accumulator's driver-built rows (``streaming.accumulator``).
 
-``add_items``, each flush-history row and the empty history frame are
-built on the driver and sent to the JVM as one Arrow table instead of
-``spark.createDataFrame(list, schema)``. These tests pin that only the
-transport changed: the same rows land, bad items fail the same way and
-stage nothing, and the staged frame's plan runs no Python worker.
+``add_items`` and each flush-history row are checked and converted as
+``spark.createDataFrame(list, schema)`` would, into one Arrow table
+(``_arrow_table``), and written from the driver as one parquet file
+through ``fsutil.write_bytes``; the empty history frame is that table
+sent to the JVM (``_local_frame``). These tests pin that only the
+transport changed: Spark reads the same rows and the same schema back
+(dates before 1582, ``timestamp_ntz``, full-precision decimals and
+non-UTC process time zones included), bad items fail the same way and
+stage nothing, and the empty frame's plan runs no Python worker. They
+also pin ``write_bytes``' commit protocol.
 """
 
 from __future__ import annotations
@@ -18,7 +22,10 @@ import time
 import pytest
 from pyspark.sql import types as T
 
+from convex_batch_processor_spark import fsutil
+from convex_batch_processor_spark.sources.registry import HandleRegistry
 from convex_batch_processor_spark.streaming.accumulator import (
+    FLUSH_HISTORY_SCHEMA,
     BatchAccumulator,
     _local_frame,
 )
@@ -90,10 +97,12 @@ def new_york_tz():
         time.tzset()
 
 
-def _acc(spark, tmp_path) -> BatchAccumulator:
+def _acc(spark, tmp_path, schema=SCHEMA) -> BatchAccumulator:
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, epoch_id: None)
     return BatchAccumulator(
-        spark=spark, batch_id="b", root=str(tmp_path), item_schema=SCHEMA,
-        process_batch="unused",
+        spark=spark, batch_id="b", root=str(tmp_path), item_schema=schema,
+        process_batch="noop", registry=reg,
     )
 
 
@@ -109,6 +118,85 @@ def test_staged_rows_equal_list_path(spark, tmp_path, new_york_tz):
     assert want[0]["amount"] == decimal.Decimal("1.24")
     assert want[0]["rates"] == {decimal.Decimal("0.01"): decimal.Decimal("10.00"),
                                 decimal.Decimal("1.00"): None}
+
+
+EDGE = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts_ntz", T.TimestampNTZType()),
+        T.StructField("wide", T.DecimalType(38, 18)),
+    ]
+)
+EDGE_ROWS = [
+    (1, dt.date(1000, 1, 1), dt.datetime(1500, 6, 1, 12, 0, 0, 1),
+     dt.datetime(1001, 2, 3, 4, 5, 6, 7), decimal.Decimal("12345678901234567890.123456789012345678")),
+    (2, dt.date(1582, 10, 4), dt.datetime(1582, 10, 15), dt.datetime(9999, 12, 31, 23, 59, 59, 999999),
+     decimal.Decimal("-99999999999999999999.999999999999999999")),
+    (3, dt.date(1, 1, 1), dt.datetime(100, 3, 1), dt.datetime(1, 1, 1), decimal.Decimal("1E-18")),
+]
+
+
+def test_staged_calendar_edges_equal_list_path(spark, tmp_path, new_york_tz):
+    want = spark.createDataFrame(EDGE_ROWS, schema=EDGE).orderBy("id").collect()
+    acc = _acc(spark, tmp_path, EDGE)
+    acc.add_items(EDGE_ROWS)
+    staged = spark.read.schema(EDGE).parquet(acc.staging_dir)
+    assert staged.orderBy("id").collect() == want
+    assert want[0]["wide"] == EDGE_ROWS[0][4]  # full precision, no rounding
+
+
+def test_history_rows_read_back_unchanged(spark, tmp_path, new_york_tz):
+    acc = _acc(spark, tmp_path, SCHEMA)
+    acc.add_items([{"id": 1}, {"id": 2}])
+    before = dt.datetime.now()
+    assert acc.flush_now() is True
+    after = dt.datetime.now()
+
+    history = acc.flush_history()
+    # a file source reads every column as nullable; names and types hold
+    assert [(f.name, f.dataType) for f in history.schema] == [
+        (f.name, f.dataType) for f in FLUSH_HISTORY_SCHEMA
+    ]
+    [row] = history.collect()
+    assert (row.batch_id, row.epoch_id, row.item_count, row.success) == ("b", 0, 2, True)
+    assert before <= row.flushed_at <= after
+
+    # a schema-less reader infers what it infers from a Spark-written file
+    spark_written = str(tmp_path / "spark-written")
+    spark.createDataFrame([tuple(row)], FLUSH_HISTORY_SCHEMA).write.parquet(spark_written)
+    assert (spark.read.parquet(acc.history_dir).schema
+            == spark.read.parquet(spark_written).schema)
+
+
+def test_write_bytes_commit(spark, tmp_path):
+    path = str(tmp_path / "new" / "dir" / "blob.bin")  # parents missing
+    data = os.urandom(2 * fsutil.WRITE_SLICE + 7)
+    fsutil.write_bytes(spark, path, data)
+    with open(path, "rb") as f:
+        assert f.read() == data
+    visible = [f for f in os.listdir(os.path.dirname(path)) if not f.startswith((".", "_"))]
+    assert visible == ["blob.bin"]
+    assert not [f for f in os.listdir(os.path.dirname(path)) if f.endswith(".tmp")]
+
+    with pytest.raises(FileExistsError):
+        fsutil.write_bytes(spark, path, b"other")
+    fsutil.write_bytes(spark, path, b"other", overwrite=True)
+    with open(path, "rb") as f:
+        assert f.read() == b"other"
+
+
+def test_jvm_classes_cached_per_gateway(spark):
+    classes = fsutil._jvm_classes(spark)
+    assert fsutil._jvm_classes(spark) is classes
+
+    class OtherGateway:  # a replaced gateway into the same JVM
+        jvm = spark.sparkContext._gateway.jvm
+
+    assert fsutil._classes_for(OtherGateway()) is not classes
+    assert fsutil._jvm_classes(spark) is not classes  # resolved afresh
+    assert fsutil.read_text(spark, __file__).startswith('"""')
 
 
 @pytest.mark.parametrize(
