@@ -14,11 +14,9 @@ Architecture (Spark-first, not a port):
 - ``operators``  — relational primitives from SURVEY.md §2 (scans, filters,
                    joins, aggs, windows, set ops, top-k) as composable
                    DataFrame functions.
-- ``functions``  — scalar/vector/text expression helpers (pure Column ops,
-                   JVM-side; no Python row UDFs in hot paths).
-- ``streaming``  — the batch-accumulator subsystem re-expressed as
-                   Structured Streaming (dual-trigger micro-batching,
-                   snapshot-cutoff flush, at-least-once + flush history).
+- ``streaming``  — the batch-accumulator subsystem: a flush state machine
+                   on its own epoch log (timer/size/manual flushes,
+                   snapshot-cutoff epochs, at-least-once + flush history).
 - ``iterator``   — the table-iterator subsystem: chunked cursor scans with
                    pause/resume/cancel, retry + capped exponential backoff.
 - ``llmops``     — dedup (exact/MinHash-LSH/SimHash/Jaccard/embedding),

@@ -98,23 +98,10 @@ class BatchProcessor:
         acc = self._acc(batch_id)
         if block:
             return acc.flush_now()
-
-        def _bg() -> None:
-            try:
-                acc.flush_now()
-            except Exception as exc:  # noqa: BLE001
-                # a HANDLE failure is already recorded in flush_history and
-                # the epoch replays on the next flush — but a config error
-                # (unregistered handle name, checkpoint collision) raises
-                # BEFORE any epoch runs and would otherwise vanish: record
-                # it so the docstring's contract holds for every failure
-                try:
-                    # epoch_id -1 marks a pre-epoch failure (no epoch ran)
-                    acc._record_history(-1, 0, 0, False, f"{type(exc).__name__}: {exc}")
-                except Exception:  # noqa: BLE001 — last resort: never kill the daemon
-                    pass
-
-        t = threading.Thread(target=_bg, name=f"flush-{batch_id}", daemon=True)
+        # a handle failure is recorded by its epoch; a config error (an
+        # unregistered handle name) raises before any epoch runs and is
+        # recorded as epoch -1, so no failure vanishes with the thread
+        t = threading.Thread(target=acc._flush_unattended, name=f"flush-{batch_id}", daemon=True)
         # prune finished flushes so repeated non-blocking calls keep the
         # list bounded by the ones still running
         threads = self._flush_threads.setdefault(batch_id, [])
@@ -146,7 +133,7 @@ class BatchProcessor:
     def get_all_batches_for_base_id(self, base_batch_id: str) -> list[dict]:
         """getAllBatchesForBaseId (index.ts:258-263, server lib.ts:246-277):
         every ``base::seq`` batch of one logical stream — completed epochs,
-        a flushing (admitted-but-uncommitted) epoch if a flush is in
+        a flushing (logged-but-uncommitted) epoch if a flush is in
         flight or pending retry, and the current accumulating batch —
         with on-demand item counts and timestamps. Unknown base → []
         (the reference's empty index scan)."""

@@ -1,1 +1,2 @@
-"""Streaming subsystem: the batch accumulator as Structured Streaming."""
+"""Streaming subsystem: the batch accumulator (a flush state machine on its
+own epoch log) plus the Structured Streaming operators."""

@@ -1,5 +1,6 @@
 """Batch accumulator — the reference's core subsystem (SURVEY.md §2.9
-D1-D9) re-expressed as Structured Streaming.
+D1-D9): a flush state machine on the accumulator's own epoch log, whose
+epochs Spark reads as batch DataFrames.
 
 Reference semantics (convex-batch-processor, src/component/lib.ts:24-730):
 collect items into a named batch; flush to a user callback when (a) an
@@ -7,60 +8,59 @@ interval timer fires, (b) an add crosses a size threshold, or (c) a manual
 flush is requested; snapshot-cutoff isolation per flush; at-least-once
 delivery with failure retry; per-flush audit history; retention cleanup.
 
-Spark mapping — the whole hand-built state machine collapses into the
-micro-batch engine:
+Mapping:
 
 | reference                                   | here                                  |
 |---------------------------------------------|---------------------------------------|
 | addItems append-only items log (lib.ts:87)  | one driver-written parquet file per add in a staging dir (append-only by construction — no write conflicts, T2; no Spark job) |
-| interval timer per batch (lib.ts:76-83)     | ``trigger(processingTime=...)``       |
-| size-threshold immediate flush (lib.ts:104) | ``maxFilesPerTrigger`` admission + the add path nudging a manual run |
-| manual flush (lib.ts:123-179)               | one-shot ``Trigger.AvailableNow`` run |
-| snapshot cutoff createdAt < flushStartedAt  | micro-batch offset range — exact by construction (D3) |
-| stranded-item carryover (lib.ts:635-662)    | files landing mid-batch are simply the next epoch's offsets (D4) |
-| at-least-once + retry (lib.ts:694-710)      | foreachBatch failure fails the query; restart replays the SAME epoch from the checkpoint (D5) |
-| batch sequence `base::N` (lib.ts:55-62)     | ``epoch_id`` of foreachBatch (D6)     |
-| single-winner flush races (lib.ts:471-544)  | single streaming writer + checkpoint — races don't exist (D7) |
+| interval timer per batch (lib.ts:76-83)     | ``start()``: a daemon thread calling ``flush_now`` every ``flush_interval_s`` |
+| size-threshold immediate flush (lib.ts:104) | ``immediate_flush_threshold``: at most that many staged files per epoch |
+| manual flush (lib.ts:123-179)               | ``flush_now``                         |
+| snapshot cutoff createdAt < flushStartedAt  | the epoch's file list, logged as ``checkpoint/epochs/N.json`` before it is read (D3) |
+| stranded-item carryover (lib.ts:635-662)    | files staged after the flush's one staging listing form the next epoch (D4) |
+| at-least-once + retry (lib.ts:694-710)      | an epoch logged without ``checkpoint/commits/N`` replays with its logged files on the next flush, timer tick or restart (D5) |
+| batch sequence `base::N` (lib.ts:55-62)     | epoch id N, contiguous from 0 (D6)    |
+| single-winner flush races (lib.ts:471-544)  | one lock per accumulator serializes flushes; epoch log and commit files are create-only (D7) |
 | flushHistory audit rows (lib.ts:599-619)    | one driver-written history parquet file per epoch attempt (D9; no Spark job) |
-| retention: keep newest completed (lib.ts:671-692) | ``cleanup_staging`` rank-and-delete maintenance (D8) |
+| retention: keep newest completed (lib.ts:671-692) | ``vacuum_staging`` deletes committed epochs' files (D8) |
 
-Scale: the staging dir is the pattern's weak point at 100 TB if files are
-tiny — the accumulator exists precisely to coalesce; ``add_items`` writes
-one parquet file per call (one "add"), and the flush callback sees an
-epoch-bounded DataFrame it can repartition/write at any width. On a real
-cluster the staging dir would be object storage + file-notification source,
-or Kafka with ``maxOffsetsPerTrigger`` as the size trigger; the code paths
-are identical. Rows built on the driver (added items, flush-history rows)
-never become a Spark job: they are checked and converted as
-``createDataFrame`` would, into one Arrow table (``_arrow_table``),
-serialized to parquet in memory and committed through the Hadoop FS API
-as ``part-<uuid>.snappy.parquet`` via a hidden ``_``-prefixed tmp file
-and a rename (``fsutil.write_bytes``). Spark's file listing skips hidden
-names, so a flush never admits a half-written add; the views apply the
-same rule (``_hidden``), so they count and time exactly what a flush can
-admit.
-
-Deterministic tests use ``flush_now`` (AvailableNow) only — no wall-clock.
+Scale: ``add_items`` writes one parquet file per call (one "add"), and
+the handle sees an epoch-bounded DataFrame it can repartition/write at
+any width; every control-plane file goes through the Hadoop FS API
+(``fsutil``), so the root may be an object store. Driver-built rows
+(added items, history rows) start no Spark job: they are checked and
+converted as ``createDataFrame`` would (``_arrow_table``), serialized to
+parquet in memory and committed as ``part-<uuid>.snappy.parquet`` via a
+hidden ``_``-prefixed tmp file and a rename (``fsutil.write_bytes``).
+Flushes and views skip hidden names as Spark's listing does
+(``_hidden``), so no epoch admits a half-written add.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import decimal
+import json
 import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from .. import fsutil
 from ..sources.registry import HandleRegistry, default_registry
+
+#: a hidden ``_….tmp`` staging file older than this many seconds is a
+#: write that died between write and rename; ``vacuum_staging`` deletes it
+STALE_TMP_S = 3600.0
 
 FLUSH_HISTORY_SCHEMA = T.StructType(
     [
@@ -159,7 +159,7 @@ def _write_parquet_file(spark: SparkSession, directory: str, rows: list,
 
 
 def _hidden(name: str) -> bool:
-    """Spark's file listing skips this name, so a flush never admits it:
+    """Spark's file listing skips this name, and so does a flush:
     ``_``-prefixed (unless it holds a ``=``, a partition-style name),
     ``.``-prefixed, or an in-progress ``._COPYING_`` upload. In-flight
     tmp files, checksums and the deletion markers are all hidden."""
@@ -170,17 +170,18 @@ def _hidden(name: str) -> bool:
 @dataclass(frozen=True)
 class _Staging:
     """One snapshot of an accumulator's bookkeeping, read once per view
-    call: every epoch the stream ADMITTED with its staging-file basenames
-    (checkpoint source log), the epochs whose commit landed (checkpoint
-    commits/), and one staging listing split by Spark's hidden-name rule:
-    the files a flush can admit (basename -> mtime) and the hidden names.
-    Every derived set below comes from this one read, so the views cannot
-    disagree with each other or with what a flush admits."""
+    call and once per flush: every LOGGED epoch with its staging-file
+    basenames (``checkpoint/epochs/``), the epochs whose commit landed
+    (``checkpoint/commits/``), and one staging listing split by Spark's
+    hidden-name rule: the files a flush can admit and the hidden names,
+    each with its mtime. Every derived set below comes from this one
+    read, so the views cannot disagree with each other or with what a
+    flush admits."""
 
     epochs: dict[int, set[str]]
     committed: set[int]
     files: dict[str, float]
-    hidden: set[str]
+    hidden: dict[str, float]
 
     @property
     def next_seq(self) -> int:
@@ -193,34 +194,52 @@ class _Staging:
         return names & self.files.keys()
 
     def pending_files(self) -> set[str]:
-        """Visible parquet files not admitted by ANY epoch — the
+        """Visible parquet files not logged in ANY epoch — the
         accumulating batch's contents."""
-        admitted = set().union(*self.epochs.values())
-        return {n for n in self.files if n.endswith(".parquet") and n not in admitted}
+        logged = set().union(*self.epochs.values())
+        return {n for n in self.files if n.endswith(".parquet") and n not in logged}
 
     def markers(self, prefix: str) -> set[int]:
         """Sequences carrying a ``{prefix}{seq}`` deletion marker in staging.
 
         ``_deleted_{seq}``: the COMMITTED batch document was deleted
-        (lib.ts:300-337 deletes the batch doc itself, so the batch
-        disappears from getAllBatchesForBaseId). The epoch number lives
-        immutably in the checkpoint source log, so deletion is recorded
-        as a marker file; list_batches omits marked sequences and
+        (lib.ts:300-337 deletes the doc itself). The epoch stays in the
+        immutable epoch log, so list_batches omits marked sequences and
         delete_batch reports them not-found.
 
         ``_deleted_acc_{seq}``: the EMPTY ACCUMULATING batch doc was
-        deleted. Unlike committed tombstones these are conditional: they
-        only suppress the accumulating entry while it stays empty — the
-        reference recreates the batch doc when items arrive again, so
-        staged ROWS (zero-row files don't count — same emptiness
-        predicate as delete_batch) or an admitted epoch under the same
-        sequence void the marker (it is simply ignored for any sequence
-        other than the CURRENT empty next_seq).
-
-        The ``_deleted_`` prefix never picks up an ``_deleted_acc_``
-        marker: ``acc_N`` is not a number."""
+        deleted. The marker only counts for the CURRENT next_seq while it
+        holds no staged ROWS (zero-row files don't count — delete_batch's
+        emptiness predicate): the reference recreates the doc when items
+        arrive again. (``acc_N`` is not a number, so the ``_deleted_``
+        prefix never picks these up.)"""
         tails = (n[len(prefix):] for n in self.hidden if n.startswith(prefix))
         return {int(t) for t in tails if t.isascii() and t.isdecimal()}
+
+
+class _EpochFailed(RuntimeError):
+    """The handle raised inside an epoch; the attempt is in the history."""
+
+
+class FlushTimer(threading.Thread):
+    """The interval flush ``BatchAccumulator.start`` returns: a daemon
+    thread that flushes every ``flush_interval_s`` until ``stop``. A
+    failed tick is in the history and its epoch replays on the next tick,
+    as the reference reschedules a failed flush (lib.ts:694-710)."""
+
+    def __init__(self, acc: BatchAccumulator) -> None:
+        super().__init__(name=f"accumulate-{acc.batch_id}", daemon=True)
+        self.acc, self._stopped = acc, threading.Event()
+        self.start()
+
+    def run(self) -> None:
+        while not self._stopped.wait(self.acc.flush_interval_s):
+            self.acc._flush_unattended()
+
+    def stop(self) -> None:
+        """End the loop and join the thread (a running flush finishes)."""
+        self._stopped.set()
+        self.join()
 
 
 @dataclass
@@ -230,7 +249,7 @@ class BatchAccumulator:
     Parameters mirror the reference's ``BatchConfig``
     (src/client/index.ts:204-213): ``process_batch`` (handle name),
     ``flush_interval_s`` (flushIntervalMs), ``immediate_flush_threshold``
-    (size trigger, expressed as max staged files admitted per micro-batch).
+    (size trigger, expressed as max staged files per epoch).
     """
 
     spark: SparkSession
@@ -241,6 +260,8 @@ class BatchAccumulator:
     flush_interval_s: float = 30.0
     immediate_flush_threshold: int | None = None
     registry: HandleRegistry = field(default_factory=lambda: default_registry)
+    # one flush at a time per accumulator: the single winner (D7)
+    _flush_lock: threading.Lock = field(default_factory=threading.Lock, init=False, compare=False)
 
     # --- paths --------------------------------------------------------------
 
@@ -250,6 +271,7 @@ class BatchAccumulator:
 
     @property
     def checkpoint_dir(self) -> str:
+        """The epoch log: ``epochs/N.json`` and ``commits/N``."""
         return os.path.join(self.root, "checkpoint")
 
     @property
@@ -279,147 +301,122 @@ class BatchAccumulator:
 
     # --- flush machinery ----------------------------------------------------
 
-    def _start_stream(self, query_name: str, **trigger) -> StreamingQuery:
-        """The accumulating stream: staged files -> ``_foreach_batch``,
-        checkpointed, under the given trigger."""
-        reader = self.spark.readStream.schema(self.item_schema).format("parquet")
-        if self.immediate_flush_threshold is not None:
-            # admission control ≈ size trigger: an epoch closes once this
-            # many staged files are admitted (D1 size path)
-            reader = reader.option("maxFilesPerTrigger", self.immediate_flush_threshold)
-        return (
-            reader.load(self.staging_dir)
-            .writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(**trigger)
-            .queryName(query_name)
-            .start()
-        )
-
     def _record_history(self, epoch_id: int, item_count: int, duration_ms: int,
                         success: bool, error: str | None) -> None:
         row = (self.batch_id, epoch_id, item_count, dt.datetime.now(),
                duration_ms, success, error)
         _write_parquet_file(self.spark, self.history_dir, [row], FLUSH_HISTORY_SCHEMA)
 
-    def _foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _deliver(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Epoch executor ≈ executeFlush (lib.ts:546-597): dispatch the
-        registered handle, record history, propagate failure so the
-        checkpoint replays the epoch (at-least-once, D5).
+        registered handle and record history; a handle failure is
+        recorded, then raised as ``RuntimeError`` so the epoch stays
+        uncommitted and replays (at-least-once, D5).
 
         The handle gets the epoch's frame UNCACHED: the pre-count needs
-        no column, so it reads only the admitted files' parquet footers,
-        and the handle's own action is the one full scan. A handle that
-        runs several actions over the frame should ``persist`` it (and
+        no column, so it reads only the epoch's parquet footers, and the
+        handle's own action is the one full scan. A handle that runs
+        several actions over the frame should ``persist`` it (and
         ``unpersist`` before returning)."""
         handle = self.registry.resolve(self.process_batch)
         count = batch_df.count()
         if count == 0:
             return  # empty-group short-circuit (lib.ts:157-159)
-        start = time.monotonic()
+        start, failure = time.monotonic(), None
         try:
             handle(batch_df, epoch_id)
         except Exception as e:  # noqa: BLE001
-            dur = int((time.monotonic() - start) * 1000)
-            self._record_history(epoch_id, count, dur, False, f"{type(e).__name__}: {e}")
-            raise
+            failure = e
+        error = None if failure is None else f"{type(failure).__name__}: {failure}"
         dur = int((time.monotonic() - start) * 1000)
-        self._record_history(epoch_id, count, dur, True, None)
+        self._record_history(epoch_id, count, dur, failure is None, error)
+        if failure is not None:
+            msg = f"flush failed in epoch {epoch_id} (re-calling retries it): {error}"
+            raise _EpochFailed(msg) from failure
 
-    def _ensure_staging(self) -> bool:
-        # a parquet stream needs the dir to exist; before any add there is
-        # nothing to flush (flushBatch's "no batch" early-out, lib.ts:141-148)
+    def _run_epoch(self, epoch_id: int, names) -> None:
+        """Deliver one LOGGED epoch: read exactly its files, count, run the
+        handle, write history, then commit. A crash before the commit leaves
+        the log entry, so the epoch replays with the same id and files."""
+        paths = [os.path.join(self.staging_dir, n) for n in sorted(names)]
+        self._deliver(self.spark.read.schema(self.item_schema).parquet(*paths), epoch_id)
+        commit = os.path.join(self.checkpoint_dir, "commits", str(epoch_id))
+        fsutil.write_text(self.spark, commit, "")
+
+    def _has_staging(self) -> bool:
+        # before any add there is nothing to flush or list (flushBatch's
+        # "no batch" early-out, lib.ts:141-148)
         return fsutil.is_dir(self.spark, self.staging_dir)
 
     def flush_now(self) -> bool:
-        """Manual flush (D2) — run the stream once over everything staged
-        (``Trigger.AvailableNow``), honoring the size-threshold admission
-        (multiple epochs if more files are staged than the threshold).
+        """Manual flush (D2). Under the accumulator's lock, from one
+        staging snapshot: replay every logged epoch that has no commit, in
+        epoch order, with its logged files; then cut the pending files,
+        oldest first by (mtime, name), into new epochs of at most
+        ``immediate_flush_threshold`` files (all when None), each logged
+        before it is read. Returns False if nothing was ever staged.
+        Raises ``RuntimeError`` if the user handle raised (after recording
+        the attempt): the epoch stays logged without a commit, so the next
+        flush retries it with the same files — at-least-once."""
+        with self._flush_lock:
+            if not self._has_staging():
+                return False
+            self.registry.resolve(self.process_batch)  # fail fast on bad handle names
+            s = self._staging()
+            for epoch_id in sorted(s.epochs.keys() - s.committed):
+                self._run_epoch(epoch_id, s.epochs[epoch_id])
+            pending = sorted(s.pending_files(), key=lambda n: (s.files[n], n))
+            size = self.immediate_flush_threshold or max(len(pending), 1)
+            for epoch_id, at in enumerate(range(0, len(pending), size), start=s.next_seq):
+                names = pending[at:at + size]
+                log = os.path.join(self.checkpoint_dir, "epochs", f"{epoch_id}.json")
+                fsutil.write_text(self.spark, log, json.dumps(names))
+                self._run_epoch(epoch_id, names)
+            return True
 
-        Returns False if nothing was ever staged. Raises if the user handle
-        raised (after recording the failed attempt) — re-calling retries the
-        same epoch from the checkpoint: at-least-once.
-        """
-        if not self._ensure_staging():
-            return False
-        self.registry.resolve(self.process_batch)  # fail fast on bad handle names
-        q = self._start_stream(f"flush-{self.batch_id}-{uuid.uuid4().hex[:8]}",
-                               availableNow=True)
+    def _flush_unattended(self) -> None:
+        """``flush_now`` for a caller nobody waits on (the timer, a
+        background flush). A handle failure is already in the history and
+        replays on the next flush; any other failure (an unregistered
+        handle name, a storage error) is recorded as epoch -1 so it does
+        not vanish with the thread."""
         try:
-            q.awaitTermination()
-        except Exception as exc:  # StreamingQueryException → retryable flush failure
-            raise RuntimeError(f"flush failed (re-calling retries the same epoch): {exc}") from exc
-        finally:
-            if q.isActive:
-                q.stop()
-        return True
+            self.flush_now()
+        except _EpochFailed:
+            pass
+        except Exception as exc:  # noqa: BLE001
+            with contextlib.suppress(Exception):  # last resort: never kill the thread
+                self._record_history(-1, 0, 0, False, f"{type(exc).__name__}: {exc}")
 
-    def start(self):
-        """Continuous accumulation (D1 time path): interval-triggered stream.
-        Returns the StreamingQuery; caller owns stop()."""
-        if not self._ensure_staging():
-            fsutil.mkdirs(self.spark, self.staging_dir)
-            # streaming parquet source requires at least the directory
-        return self._start_stream(f"accumulate-{self.batch_id}",
-                                  processingTime=f"{self.flush_interval_s} seconds")
+    def start(self) -> FlushTimer:
+        """Continuous accumulation (D1 time path): flush every
+        ``flush_interval_s`` on a daemon thread; the caller owns ``stop()``."""
+        return FlushTimer(self)
 
-    # --- D8 retention: delete flushed staging files -------------------------
+    # --- bookkeeping --------------------------------------------------------
 
-    def _source_epoch_files(self) -> dict[int, set[str]]:
-        """Staging file BASENAMES per epoch, from the checkpoint's
-        FileStreamSource log — every epoch the stream ever ADMITTED,
-        whether its commit landed or not. All filesystem access goes
-        through the Hadoop FS API (fsutil) so the root may be an object
-        store; comparison is by basename because the source log stores
-        percent-encoded URIs while directory listings return raw paths —
-        staging is one flat dir of part-files whose names carry a UUID
-        (globally unique and URI-safe), so basenames identify exactly.
-
-        COMPACTION: every compactInterval-th (default 10) batch is
-        written as ``N.compact`` holding the CUMULATIVE entry list (and
-        the plain files it superseded may be cleaned up), so epochs must
-        be grouped by each entry's own ``batchId`` field, never by log
-        file name — reading only plain digit files silently loses every
-        10th epoch from listing/vacuum/status."""
-        import json
-        from urllib.parse import unquote, urlparse
-
-        source_log = os.path.join(self.checkpoint_dir, "sources", "0")
+    def _epoch_log(self) -> dict[int, set[str]]:
+        """Staging-file basenames per logged epoch (``epochs/N.json``)."""
+        log = os.path.join(self.checkpoint_dir, "epochs")
         out: dict[int, set[str]] = {}
-        for fname in fsutil.listdir(self.spark, source_log):
-            stem, dot, suffix = fname.partition(".")
-            if not stem.isdigit() or (dot and suffix != "compact"):
-                continue  # .tmp / .crc noise
-            file_batch = int(stem)
-            # an admitted batch exists even if it carries zero entries
-            out.setdefault(file_batch, set())
-            for line in fsutil.read_text(
-                self.spark, os.path.join(source_log, fname)
-            ).splitlines():
-                line = line.strip()
-                if not line.startswith("{"):
-                    continue
-                entry = json.loads(line)
-                path = entry.get("path", "")
-                if not path:
-                    continue
-                batch = int(entry.get("batchId", file_batch))
-                out.setdefault(batch, set()).add(
-                    os.path.basename(unquote(urlparse(path).path))
-                )
+        for name in fsutil.listdir(self.spark, log):
+            stem, ext = os.path.splitext(name)
+            if ext == ".json" and stem.isdigit():  # not an in-flight ``_N.json.tmp``
+                text = fsutil.read_text(self.spark, os.path.join(log, name))
+                out[int(stem)] = set(json.loads(text))
         return out
 
     def _staging(self) -> _Staging:
-        """The one bookkeeping read behind each view (see ``_Staging``)."""
+        """The one bookkeeping read behind each view and flush (see ``_Staging``)."""
         commits_dir = os.path.join(self.checkpoint_dir, "commits")
         # one listStatus snapshot: names AND mtimes together (no
         # per-file stat round-trips, no stat-after-delete race)
         listing = fsutil.list_statuses(self.spark, self.staging_dir)
         return _Staging(
-            epochs=self._source_epoch_files(),
+            epochs=self._epoch_log(),
             committed={int(n) for n in fsutil.listdir(self.spark, commits_dir) if n.isdigit()},
             files={n: t for n, t in listing.items() if not _hidden(n)},
-            hidden={n for n in listing if _hidden(n)},
+            hidden={n: t for n, t in listing.items() if _hidden(n)},
         )
 
     def _row_counts(self, names) -> dict[str, int]:
@@ -429,8 +426,6 @@ class BatchAccumulator:
         ``ignoreMissingFiles``: a concurrent vacuum or delete_batch may
         remove a file between the caller's listing and this read — a
         control-plane count must degrade, not crash."""
-        from urllib.parse import unquote, urlparse
-
         paths = [
             os.path.join(self.staging_dir, n) for n in sorted(names) if n.endswith(".parquet")
         ]
@@ -446,15 +441,24 @@ class BatchAccumulator:
         )
         return {os.path.basename(unquote(urlparse(r["_f"]).path)): r["count"] for r in rows}
 
+    # --- D8 retention: delete flushed staging files -------------------------
+
     def vacuum_staging(self) -> list[str]:
         """Delete staging files whose epochs are COMMITTED (the reference
-        deletes flushed batchItems, lib.ts:622-634). Uncommitted epochs
-        (failed flushes pending retry) keep their files, preserving
-        at-least-once. Returns the deleted paths.
+        deletes flushed batchItems, lib.ts:622-634), and hidden
+        ``_….tmp`` files older than ``STALE_TMP_S`` (adds that died
+        between write and rename: no flush admits them and nothing else
+        deletes them). Uncommitted epochs (failed flushes pending retry)
+        keep their files, preserving at-least-once. Returns the deleted
+        paths.
         """
+        s = self._staging()
+        cutoff = time.time() - STALE_TMP_S
+        stale = {n for n, t in s.hidden.items()
+                 if n.startswith("_") and n.endswith(".tmp") and t < cutoff}
         doomed = [
             os.path.join(self.staging_dir, name)
-            for name in sorted(self._staging().committed_files())
+            for name in sorted(s.committed_files() | stale)
         ]
         for p in doomed:
             fsutil.delete(self.spark, p)
@@ -466,12 +470,12 @@ class BatchAccumulator:
         """getFlushHistory (lib.ts:279-301): newest-first audit rows.
 
         Delivery caveat (inherent to the at-least-once model): history rows
-        are AT-LEAST-ONCE per epoch, written outside the checkpoint commit.
-        If the handle succeeds but the history write itself fails, the
-        epoch replays → duplicate handle side effects AND a possible
-        success row for an epoch whose commit never landed; a replayed
-        epoch likewise re-records its attempt. Consumers that need
-        exactly-one row per attempt should dedupe on
+        are AT-LEAST-ONCE per epoch, written before the epoch's commit.
+        If the history write or the commit fails after the handle
+        succeeded, the epoch replays → duplicate handle side effects AND
+        possibly a success row for an epoch whose commit never landed; a
+        replayed epoch likewise re-records its attempt. Consumers that
+        need exactly-one row per attempt should dedupe on
         (batch_id, epoch_id, success) keeping the latest flushed_at."""
         if not fsutil.is_dir(self.spark, self.history_dir):
             return _local_frame(self.spark, [], FLUSH_HISTORY_SCHEMA)
@@ -481,11 +485,11 @@ class BatchAccumulator:
 
     def list_batches(self) -> list[dict]:
         """getAllBatchesForBaseId (lib.ts:246-277) over the epoch model:
-        ``sequence`` ≡ foreachBatch ``epoch_id`` (D6), ``batch_id`` is the
-        composed ``base::seq`` (P6, lib.ts:62). A COMMITTED epoch is a
-        ``completed`` batch; an admitted-but-uncommitted epoch (failed
-        flush pending retry) is ``flushing``; staged files not yet
-        admitted form the current ``accumulating`` batch with
+        ``sequence`` ≡ epoch id (D6), ``batch_id`` is the composed
+        ``base::seq`` (P6, lib.ts:62). A COMMITTED epoch is a
+        ``completed`` batch; a logged-but-uncommitted epoch (flush in
+        flight, or failed and pending retry) is ``flushing``; staged
+        files in no epoch form the current ``accumulating`` batch with
         sequence = next epoch.
 
         ``item_count`` counts rows whose staging files still exist — the
@@ -496,7 +500,7 @@ class BatchAccumulator:
         max(batchItems.createdAt) via file mtimes, falling back to the
         batch's own timestamp — here the epoch's flush-history time
         (lib.ts:259-267)."""
-        if not self._ensure_staging():
+        if not self._has_staging():
             return []  # nothing ever staged → no batch docs (lib.ts:251-253)
         s = self._staging()
         hist_at: dict[int, dt.datetime] = {}
@@ -504,11 +508,9 @@ class BatchAccumulator:
             hist_at.setdefault(r.epoch_id, r.flushed_at)  # newest-first order
         counts = self._row_counts(s.files)
 
-        # The reference's batch doc ALWAYS carries createdAt (schema.ts) —
-        # an empty accumulating batch (no staged files, no history row)
-        # must still report a concrete timestamp, not None: fall back to
-        # the newest visible staging file's mtime, else now (batch doc
-        # creation time)
+        # the reference's batch doc ALWAYS carries createdAt (schema.ts): an
+        # empty batch with no history row falls back to the newest visible
+        # staging file's mtime, else now (batch doc creation time)
         dir_fallback = (
             dt.datetime.fromtimestamp(max(s.files.values()))
             if s.files else dt.datetime.now()
@@ -535,12 +537,10 @@ class BatchAccumulator:
             if seq not in deleted  # deleted batch docs vanish (lib.ts:300-337)
         ]
         pending = s.pending_files()
-        # a deleted EMPTY accumulating batch stays hidden until ITEMS
-        # arrive again (the reference recreates the doc on the next add).
-        # "Empty" is the same predicate delete_batch uses — zero ROWS, not
-        # zero files: a zero-row staged parquet (add_dataframe of an empty
-        # frame) has no items, so it neither blocks the delete there nor
-        # voids the marker here.
+        # a deleted EMPTY accumulating batch stays hidden until ITEMS arrive
+        # again (the reference recreates the doc on the next add); "empty"
+        # is delete_batch's predicate: zero ROWS, so a zero-row staged
+        # parquet neither blocks the delete there nor voids the marker here
         pending_rows = sum(counts.get(n, 0) for n in pending)
         if pending_rows > 0 or s.next_seq not in s.markers("_deleted_acc_"):
             out.append(entry(s.next_seq, pending, "accumulating"))
@@ -551,7 +551,7 @@ class BatchAccumulator:
         pending items, else delete the batch's staged items — the
         reference's batchItems deletion; flush-history audit rows
         survive, exactly as the reference keeps flushHistory."""
-        if not self._ensure_staging():
+        if not self._has_staging():
             return {"deleted": False, "reason": "Batch not found"}
         s = self._staging()
         if sequence not in s.epochs and sequence != s.next_seq:
@@ -561,7 +561,7 @@ class BatchAccumulator:
             # hits a missing document (lib.ts:304-306)
             return {"deleted": False, "reason": "Batch not found"}
         if sequence in s.epochs and sequence not in s.committed:
-            # admitted but no commit: a flush is in flight (or failed and
+            # logged but no commit: a flush is in flight (or failed and
             # pending its at-least-once retry) — deleting its files would
             # corrupt the replay (lib.ts:312-314)
             return {"deleted": False, "reason": "Cannot delete batch while flushing"}
@@ -575,24 +575,16 @@ class BatchAccumulator:
             # empty accumulating batch (lib.ts:323-325): mark the doc
             # deleted; staged items or a flush under this sequence void
             # the marker (the reference recreates the doc on re-add)
-            fsutil.write_text(
-                self.spark,
-                os.path.join(self.staging_dir, f"_deleted_acc_{sequence}"),
-                "",
-                overwrite=True,
-            )
+            marker = os.path.join(self.staging_dir, f"_deleted_acc_{sequence}")
+            fsutil.write_text(self.spark, marker, "", overwrite=True)
             return {"deleted": True}
         for name in s.epochs.get(sequence, set()) & s.files.keys():
             fsutil.delete(self.spark, os.path.join(self.staging_dir, name))
         # tombstone AFTER the item deletes: the batch doc disappears from
         # getAllBatchesForBaseId (lib.ts deletes the doc itself); flush
         # history survives as the audit trail
-        fsutil.write_text(
-            self.spark,
-            os.path.join(self.staging_dir, f"_deleted_{sequence}"),
-            "",
-            overwrite=True,
-        )
+        fsutil.write_text(self.spark, os.path.join(self.staging_dir, f"_deleted_{sequence}"),
+                          "", overwrite=True)
         return {"deleted": True}
 
     def status(self) -> dict:
@@ -603,7 +595,7 @@ class BatchAccumulator:
         here counts staging files NOT in committed epochs — computed on
         demand, never stored (T3/schema.ts:9)."""
         staged = 0
-        if self._ensure_staging():
+        if self._has_staging():
             s = self._staging()
             staged = sum(self._row_counts(s.files.keys() - s.committed_files()).values())
         # coalesce(1): the global aggregate then needs no exchange, so it is

@@ -1,8 +1,9 @@
 """Default-tier smoke of the batch accumulator: one add -> flush ->
 status -> vacuum round through ``BatchProcessor`` whose first epoch
 attempt fails and is replayed, the Spark jobs the control plane starts,
-and hidden staging files. The full accumulator and client suites are in
-the slow tier; this keeps their core path in every default run."""
+and hidden staging files. The client suite is in the slow tier; this
+keeps its accumulator path in every default run, beside the accumulator
+suite (``tests/test_accumulator.py``)."""
 
 from __future__ import annotations
 

@@ -323,7 +323,7 @@ def test_empty_accumulating_batch_reports_concrete_timestamps(spark, tmp_path):
 
 
 def test_delete_batch_refuses_while_flush_pending_retry(spark, tmp_path):
-    """An admitted-but-uncommitted epoch (failed flush awaiting its
+    """A logged-but-uncommitted epoch (failed flush awaiting its
     at-least-once retry) maps to the reference's 'flushing' guard
     (lib.ts:312-314): deleting its files would corrupt the replay."""
     reg = HandleRegistry()
