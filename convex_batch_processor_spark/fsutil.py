@@ -145,8 +145,8 @@ def write_bytes(spark: SparkSession, path: str, data: bytes,
     pair with unique names so a half-committed file is never read).
     Overwriting an EXISTING path is NOT atomic (Hadoop rename won't
     replace: there is a delete-then-rename window) — callers must opt in
-    with ``overwrite=True`` and tolerate the window; the matview avoids
-    it entirely by never rewriting a committed manifest."""
+    with ``overwrite=True`` and tolerate the window; streaming/verstore.py
+    avoids it entirely by never rewriting a committed manifest."""
     fs, jp = _fs_path(spark, path)
     if fs.exists(jp) and not overwrite:
         raise FileExistsError(f"{path} exists (pass overwrite=True for the "

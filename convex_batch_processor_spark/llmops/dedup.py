@@ -401,11 +401,10 @@ def minhash_md5_digests(shingle_col="shingle", num_perm: int = 16) -> dict:
     can only move monotonically from the min-h1 element (p=0) to the
     min-h2 element (p→∞), so the num_perm signature components are
     near-perfectly correlated — measured agreement on near-identical
-    shingle sets collapsed to 0/16 where Jaccard predicts ~11/16
-    (caught by test_group_signature_agreement_tracks_overlap). Disjoint
-    digest bits are genuinely independent across p. 32-bit mins: within
-    a document's ~10²-shingle set the collision odds are ~10⁴/2³³ —
-    immaterial, and identical in both engines either way."""
+    shingle sets collapsed to 0/16 where Jaccard predicts ~11/16.
+    Disjoint digest bits are genuinely independent across p. 32-bit
+    mins: within a document's ~10²-shingle set the collision odds are
+    ~10⁴/2³³ — immaterial, and identical in both engines either way."""
     col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
     n_digests = (num_perm + 3) // 4
     return {
@@ -431,41 +430,6 @@ def _minhash_md5_mins(num_perm: int) -> tuple[list, list]:
         )
         post.append(F.conv(F.col(f"_s{p}"), 16, 10).cast("long").alias(f"h{p}"))
     return aggs, post
-
-
-def minhash_group_signatures(
-    df: DataFrame,
-    group_cols: list[str],
-    text_col: str = "text",
-    num_perm: int = 16,
-) -> DataFrame:
-    """Merged MinHash signature PER GROUP (h0..h{num_perm-1} columns):
-    the min over every shingle of every document in the group — the
-    group-level shingle-set sketch (estimate cross-source containment/
-    Jaccard from signature agreement without touching row data).
-
-    Because min is a mergeable, order-independent aggregate, this same
-    expression runs as a STREAMING stateful aggregation
-    (streaming/sketches.streaming_minhash_signatures) with state
-    guaranteed bit-identical to the batch-built sketch — and mergeable
-    with one across pipelines.
-
-    SKETCH FORMAT v2 (round 5): h0..h{p-1} changed from 16-hex STRINGS
-    (min over hex digests) to INT64 (conv base-16 min applied after the
-    string min — same ordering, fixed-width hex is order-isomorphic to
-    its integer value). Any streaming checkpoint or persisted sketch
-    written by the v1 string-typed aggregates is schema-incompatible:
-    REBUILD such state from source rather than restoring/merging — a
-    restore fails on the aggregate expression change, and a hand-merged
-    v1 string MIN against v2 int64 MIN would silently mismatch.
-    """
-    toks = df.select(*group_cols, tokens_col(text_col).alias("_toks"))
-    sh = toks.select(
-        *group_cols, F.explode(shingles_from_tokens("_toks")).alias("shingle")
-    )
-    sh = sh.withColumns(minhash_md5_digests(num_perm=num_perm))
-    aggs, post = _minhash_md5_mins(num_perm)
-    return sh.groupBy(*group_cols).agg(*aggs).select(*group_cols, *post)
 
 
 def _md5_band_pairs(

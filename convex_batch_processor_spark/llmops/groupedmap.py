@@ -23,8 +23,10 @@ def group_zscore(
 ) -> DataFrame:
     """Per-key z-score normalization via applyInPandas.
 
-    Nested function: cloudpickled by value → executors never import this
-    package (see streaming/stateful.py for the by-reference trap).
+    Nested function on purpose: cloudpickle ships nested functions by
+    value, so executor Python workers never import this package. A
+    module-level function is pickled by reference and breaks when the
+    driver runs outside the repo root.
 
     Determinism (oracle parity): mean/variance are derived from EXACT
     integer sums of the 2-dp values (``round(v*100)`` as int64 — order

@@ -11,7 +11,7 @@ Design for 100 TB:
 - Every sketch here is an ORDER-INDEPENDENT aggregate (sums of counters,
   max of register ranks, OR of bit positions), so Spark's partial
   aggregation combines map-side and the final sketch is a tiny table:
-  depth×width cells (CMS), m registers per group (HLL), ≤ m_bits rows
+  depth×width cells (CMS), m registers per group (HLL), m_bits/32 words
   (Bloom). The corpus shuffles its *keys* once; the sketch itself always
   fits in one executor — and is broadcast back for probing.
 - The hash family is md5-derived and ENGINE-PORTABLE: h_salt(x) = the
@@ -25,7 +25,7 @@ Design for 100 TB:
   runtime bloom-filter join (spark.sql.optimizer.runtime.bloomFilter.*)
   and approx_count_distinct (a tuned HLL++); these operators exist for
   the cases those don't cover: persisting the sketch as DATA (shipping a
-  bloom/CMS to another job), probing it relationally, and replaying it
+  bloom/CMS to another job), probing it as a plan literal, and replaying it
   byte-for-byte across engines.
 """
 
@@ -285,23 +285,6 @@ def hll_oracle_ctes(
 # --- Bloom filter -----------------------------------------------------------
 
 
-def bloom_bits(
-    keys: DataFrame, key_col: str, m_bits: int = 4096, k: int = 3
-) -> DataFrame:
-    """Build a Bloom filter as a RELATION of set bit positions (≤ m_bits
-    rows): pos_i(key) = h_i(key) % m_bits for i < k, distinct-ed. An
-    order-independent bit-OR — partial aggregation collapses it map-side;
-    the result always fits in memory and broadcasts."""
-    return (
-        keys.select(
-            F.explode(
-                F.array(*[(md5_int(key_col, i) % m_bits).alias(f"p{i}") for i in range(k)])
-            ).alias("pos")
-        )
-        .distinct()
-    )
-
-
 def bloom_bitmap(
     keys: DataFrame, key_col: str, m_bits: int = 4096, k: int = 3
 ) -> list[int]:
@@ -358,37 +341,6 @@ def bloom_hit_col(
         bit = F.floor(word / sel).cast("long") % 2
         hit = hit & (bit == 1)
     return hit
-
-
-def bloom_contains(
-    probe: DataFrame,
-    bits: DataFrame,
-    key_col: str,
-    m_bits: int = 4096,
-    k: int = 3,
-    out: str = "bloom_hit",
-) -> DataFrame:
-    """Membership test: a probe key passes iff ALL k positions are set.
-    Implemented as explode(k positions) → broadcast-join the bit relation
-    → count matches == k. No false negatives by construction; false
-    positives at the standard (1 - e^{-kn/m})^k rate. The probe side
-    keeps its partitioning — the only movement is the broadcast."""
-    pos = probe.select(key_col).distinct().select(
-        F.col(key_col),
-        F.explode(
-            F.array(*[(md5_int(key_col, i) % m_bits) for i in range(k)])
-        ).alias("pos"),
-    )
-    hits = (
-        pos.join(F.broadcast(bits), "pos")
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_nset"))
-    )
-    return (
-        probe.join(hits, key_col, "left")
-        .withColumn(out, F.coalesce(F.col("_nset"), F.lit(0)) == k)
-        .drop("_nset")
-    )
 
 
 def cms_inner_product(

@@ -3,8 +3,7 @@
 The lag → new-session flag → running-sum index → per-session aggregate
 pattern (reference parity: none — the reference has no event-time
 analytics; this is the Spark-native generalization SURVEY §2.9 notes).
-Streaming twins: ``session_window`` (tests/test_streaming_windows.py) and
-the ``applyInPandasWithState`` session machine (streaming/stateful.py).
+Streaming twin: ``session_window`` (tests/test_streaming_windows.py).
 
 Scale: ONE exchange on the key; the window functions and the session
 aggregate reuse the same partitioning.

@@ -152,8 +152,8 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fixed bands (not ntiles) on purpose: scores are row-independent, so
     a user's segment never silently shifts because OTHER users changed —
-    re-runnable, incrementally maintainable (the matview can keep the
-    base aggregate live), and free of the global-ntile scale hazard the
+    re-runnable, incrementally maintainable (a mergeable base aggregate
+    can be kept live), and free of the global-ntile scale hazard the
     length-curriculum query had to engineer around (histogram_rank).
     All arithmetic is exact integers; the reference date is a broadcast
     scalar.

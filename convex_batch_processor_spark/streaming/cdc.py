@@ -7,12 +7,11 @@ semantics INCREMENTALLY from a micro-batch stream, the shape a
 Debezium/Delta CDC feed needs: each epoch's delta is collapsed to
 latest-per-key and merged into ONLY the hash buckets it touches.
 
-Storage layout and commit protocol are SHARED with
-``matview.IncrementalAggView`` via ``verstore.VersionedBucketStore``
-(copy-on-write version dirs + version-stamped manifest as the atomic
-commit point — idempotent under at-least-once replay; see matview's
-module docstring for the recovery proof). What differs is the merge
-state machine:
+Storage layout and commit protocol come from
+``verstore.VersionedBucketStore`` (copy-on-write version dirs +
+version-stamped manifest as the atomic commit point — idempotent under
+at-least-once replay; the recovery argument is in verstore's module
+docstring). What lives here is the merge state machine:
 
 - state rows are the full latest row per key INCLUDING tombstones —
   a delete is data (op = 'D'), not an absence, so a LATE upsert with an
@@ -47,9 +46,8 @@ from .verstore import VersionedBucketStore
 @dataclass
 class CdcStateView(VersionedBucketStore):
     """Layout, manifest commit protocol, empty-safe version writes, reads,
-    and vacuum come from :class:`VersionedBucketStore` (shared with
-    IncrementalAggView — the two state machines can no longer drift);
-    only the last-writer-wins collapse lives here."""
+    and vacuum come from :class:`VersionedBucketStore`; only the
+    last-writer-wins collapse lives here."""
 
     spark: SparkSession
     root: str
@@ -77,9 +75,9 @@ class CdcStateView(VersionedBucketStore):
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Merge one micro-batch of change rows as version ``epoch_id``.
-        Identical recovery contract to IncrementalAggView.foreach_batch:
-        committed epochs are skipped (manifest = commit point),
-        uncommitted ones redo from the newest committed parent."""
+        Recovery is :class:`VersionedBucketStore`'s: committed epochs are
+        skipped (manifest = commit point), uncommitted ones redo from the
+        newest committed parent."""
         if epoch_id in self.committed_versions():
             return
         delta = self._collapse(batch_df).persist()

@@ -1,20 +1,23 @@
-"""Copy-on-write versioned bucket store: the shared layout + commit
-protocol under IncrementalAggView (matview.py) and CdcStateView (cdc.py).
+"""Copy-on-write versioned bucket store: the storage layout and commit
+protocol under CdcStateView (cdc.py).
 
     root/
       data/v=<epoch>/bucket=<b>/part-*.parquet   only buckets CHANGED in e
       manifest/v<epoch>.json                     {bucket: version-that-owns-it}
 
-The manifest write is the COMMIT POINT (atomic create+rename of a
-version-stamped file): a replayed epoch whose manifest exists is skipped
-outright, and one that died pre-commit redoes its version dir + manifest
-from the newest committed parent — idempotent under at-least-once replay
-(the recovery proof is in matview.py's module docstring; this module
-holds the mechanics so the two state machines can never drift apart).
+Recovery: the manifest write is the COMMIT POINT (atomic create+rename of
+a version-stamped file). An epoch whose manifest already exists was
+committed, so a replay of it is skipped outright. An epoch that died
+before its manifest landed left at most a half-written version dir that
+no manifest references; its replay redoes the version dir and the
+manifest from the newest committed parent strictly below it, never from
+its own partial output. Each epoch therefore changes the state exactly
+once under at-least-once delivery, and untouched buckets stay owned by
+older versions, carried forward by manifest reference.
 
-Consumers mix this in over attributes ``spark``, ``root``, ``key_cols``,
-``n_buckets`` and keep only their own merge semantics (mergeable
-aggregate vs last-writer-wins collapse).
+The consumer mixes this in over attributes ``spark``, ``root``,
+``key_cols``, ``n_buckets`` and keeps only its own merge semantics (the
+last-writer-wins collapse).
 """
 
 from __future__ import annotations

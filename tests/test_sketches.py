@@ -74,10 +74,10 @@ def test_bloom_no_false_negatives(spark, sf_dir):
     eval_grams = grams.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
     corpus = grams.filter(F.col("doc_id") % 50 != 0)
     m_bits, k = 4096, 3  # small filter -> some false positives at sf0.001
-    bits = K.bloom_bits(eval_grams, "gram", m_bits, k)
-    n_bits = bits.count()
+    words = K.bloom_bitmap(eval_grams, "gram", m_bits, k)
+    n_bits = sum(bin(w).count("1") for w in words)
     assert 0 < n_bits <= m_bits
-    flagged = K.bloom_contains(corpus, bits, "gram", m_bits, k)
+    flagged = corpus.withColumn("bloom_hit", K.bloom_hit_col("gram", words, m_bits, k))
     truth = corpus.join(eval_grams.withColumn("in_eval", F.lit(True)), "gram", "left")
     merged = flagged.join(
         truth.select("doc_id", "gram", "in_eval"), ["doc_id", "gram"]
@@ -95,8 +95,8 @@ def test_bloom_prunes_before_exact_join(spark, sf_dir):
     grams = g.select("doc_id", F.explode("sh").alias("gram"))
     eval_grams = grams.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
     corpus = grams.filter(F.col("doc_id") % 50 != 0)
-    bits = K.bloom_bits(eval_grams, "gram", 65536, 3)
-    flagged = K.bloom_contains(corpus, bits, "gram", 65536, 3)
+    words = K.bloom_bitmap(eval_grams, "gram", 65536, 3)
+    flagged = corpus.withColumn("bloom_hit", K.bloom_hit_col("gram", words, 65536, 3))
     n_total = corpus.count()
     n_candidates = flagged.filter(F.col("bloom_hit")).count()
     n_true = corpus.join(eval_grams, "gram", "left_semi").count()

@@ -176,9 +176,8 @@ def test_cdc_compact_to_empty_state_stays_readable(spark, tmp_path):
 
 
 def test_cdc_vacuum_shared_with_matview(spark, tmp_path):
-    """The shared VersionedBucketStore gives CdcStateView the vacuum that
-    previously existed only on IncrementalAggView — version dirs no kept
-    manifest references are reclaimed, state is unchanged."""
+    """CdcStateView's vacuum comes from VersionedBucketStore: version
+    dirs no kept manifest references are reclaimed, state is unchanged."""
     import os as _os
 
     schema = "user_id long, ts long, event_id long, op string, event_type string, value double"
