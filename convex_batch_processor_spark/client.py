@@ -22,6 +22,7 @@ from __future__ import annotations
 import threading
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -47,10 +48,13 @@ class BatchProcessor:
     _accumulators: dict[str, BatchAccumulator] = field(default_factory=dict)
     _iterators: dict[str, TableIterator] = field(default_factory=dict)
     _flush_threads: dict[str, list[threading.Thread]] = field(default_factory=dict)
-    _jobs: JobStore = field(init=False)
 
-    def __post_init__(self) -> None:
-        self._jobs = JobStore(f"{self.root}/jobs")
+    @cached_property
+    def _jobs(self) -> JobStore:
+        """Iterator job state, made on first iterator use: it must be
+        driver-local (``JobStore`` rejects a remote URI), while the
+        accumulators go through the Hadoop FS and work under any root."""
+        return JobStore(f"{self.root}/jobs")
 
     # --- accumulator surface (reference index.ts:214-301) -------------------
 

@@ -17,6 +17,15 @@ Resolving a JVM class by its dotted name costs one round-trip per name
 segment (~4 ms for ``org.apache.hadoop.fs.Path``), so the classes are
 looked up once per gateway (``_jvm_classes``). These are control-plane
 operations (a handful per add/flush/vacuum), never per-row.
+
+The many-file readers (``read_files``, ``parquet_row_counts``) resolve
+one FileSystem per directory, then pay four round-trips per file
+(``read_files``: path, open, read, close) or seven
+(``parquet_row_counts``: path, stat, length, open, seek, read, close).
+Measured warm on a 4-core host (``local[2]``, local FS, 2 KB files):
+about 1 ms per file for ``read_files`` and 1.6 ms for
+``parquet_row_counts``. Parquet's own ``ParquetFileReader.open`` took
+17 ms per file there, so the footer is parsed by pyarrow instead.
 """
 
 from __future__ import annotations
@@ -25,6 +34,7 @@ import functools
 import os
 from typing import NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -43,6 +53,7 @@ class _JvmClasses(NamedTuple):
     Path: object
     IOUtils: object
     UTF_8: object
+    FileNotFound: object  # the java.lang.Class of FileNotFoundException
 
 
 @functools.lru_cache(maxsize=1)
@@ -52,6 +63,7 @@ def _classes_for(gateway) -> _JvmClasses:
         jvm.org.apache.hadoop.fs.Path,
         jvm.org.apache.commons.io.IOUtils,
         jvm.java.nio.charset.StandardCharsets.UTF_8,
+        jvm.java.lang.Class.forName("java.io.FileNotFoundException"),
     )
 
 
@@ -129,6 +141,68 @@ def read_text(spark: SparkSession, path: str) -> str:
         return jvm.IOUtils.toString(stream, jvm.UTF_8)
     finally:
         stream.close()
+
+
+def _read_each(spark: SparkSession, directory: str, names, read) -> dict:
+    """``read(fs, path, classes)`` for each of ``names`` in ``directory``,
+    through one FileSystem. A file that vanished since the caller listed
+    it (a concurrent delete) is left out, not raised."""
+    fs, dir_jp = _fs_path(spark, directory)
+    jvm = _jvm_classes(spark)
+    out = {}
+    for name in names:
+        try:
+            out[name] = read(fs, jvm.Path(dir_jp, name), jvm)
+        except Py4JJavaError as e:
+            if not jvm.FileNotFound.isInstance(e.java_exception):
+                raise
+    return out
+
+
+def _read_whole(fs, jp, jvm) -> bytes:
+    stream = fs.open(jp)
+    try:
+        return bytes(jvm.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def read_files(spark: SparkSession, directory: str, names) -> dict[str, bytes]:
+    """Basename -> whole contents for each of ``names`` in ``directory``
+    (small control-plane files); a vanished file is left out."""
+    return _read_each(spark, directory, names, _read_whole)
+
+
+#: bytes read from a parquet file's end for its footer; a larger footer
+#: costs a second read
+FOOTER_TAIL = 64 << 10
+
+
+def _footer_rows(fs, jp, jvm) -> int:
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    size = fs.getFileStatus(jp).getLen()
+    stream = fs.open(jp)
+    try:
+        stream.seek(size - min(size, FOOTER_TAIL))
+        tail = jvm.IOUtils.toByteArray(stream)
+        # the file ends with <footer length: 4 bytes LE> b"PAR1"
+        need = int.from_bytes(tail[-8:-4], "little") + 8
+        if need > len(tail):
+            stream.seek(size - need)
+            tail = jvm.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return pq.read_metadata(pa.BufferReader(tail)).num_rows
+
+
+def parquet_row_counts(spark: SparkSession, directory: str, names) -> dict[str, int]:
+    """Basename -> row count for each parquet file among ``names`` in
+    ``directory``, read from the file's footer on the driver: no Spark
+    job, and only the file's tail crosses the gateway. A vanished file
+    is left out, as Spark's ``ignoreMissingFiles`` would skip it."""
+    return _read_each(spark, directory, names, _footer_rows)
 
 
 # bytes per py4j write call: a large buffer crosses the gateway in slices

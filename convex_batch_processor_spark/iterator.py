@@ -14,7 +14,11 @@ Spark design:
   parquet this prunes to the row groups past the cursor (min/max stats), so
   chunk cost does not grow with table size. At 100 TB you'd additionally
   precompute range boundaries once (approxQuantile) instead of per-chunk
-  TakeOrdered; both forms below.
+  TakeOrdered; both forms below. A planned chunk is the range filter
+  itself, handed to the handle uncached: its row count was fixed at
+  ``start``, so the chunk runs no job of its own. A cursor chunk is
+  persisted, because a progress job (the page's max key and row count)
+  and the handle both read it.
 - **Job state** lives in a JSON file per job (atomic rename) in
   ``JobStore``, which also owns the lifecycle transitions — the control
   plane is driver-side metadata exactly like streaming checkpoints; the
@@ -36,8 +40,9 @@ import os
 import time
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .fsutil import check_name
@@ -73,6 +78,9 @@ class IteratorJobState:
     # precomputed key-range boundaries (the 100 TB cursor plan); when set,
     # cursor is an INDEX into these ranges instead of a key value
     range_bounds: list | None = None
+    # exact row count of each planned range (len(range_bounds) + 1), fixed
+    # with the bounds; None in state saved before counts were stored
+    range_counts: list[int] | None = None
 
     def to_dict(self) -> dict:
         d = self.__dict__.copy()
@@ -139,9 +147,18 @@ class JobStore:
     Driver-local by design: job state is single-writer driver control
     state (the reference keeps it in its transactional store,
     lib.ts:898-945). On a cluster, point state_dir at a driver-attached
-    volume; the data-plane (chunks, handles) never touches it."""
+    volume; the data-plane (chunks, handles) never touches it. A
+    ``file:`` URI names its local path (so a ``BatchProcessor`` rooted at
+    a ``file:`` URI keeps both subsystems under one directory); any other
+    scheme is a ValueError."""
 
     def __init__(self, state_dir: str):
+        url = urlparse(state_dir)
+        if url.scheme == "file":
+            state_dir = unquote(url.path)
+        elif url.scheme:
+            raise ValueError(f"iterator job state is driver-local: {state_dir!r} is not a "
+                             "local path or a file: URI")
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
 
@@ -257,9 +274,13 @@ class TableIterator:
 
         ``plan_ranges`` is the 100 TB cursor strategy: compute
         ``ceil(rows / batch_size)`` chunk boundaries ONCE via
-        approxQuantile (one cheap sampling pass), then every chunk is a
-        pure range filter — row-group pruning on a sorted layout, no
-        per-chunk TakeOrdered over the remainder of the table. Default
+        approxQuantile (one cheap sampling pass) and the exact row count
+        of each range in one grouped count (``_range_counts``), then every
+        chunk is a pure range filter — row-group pruning on a sorted
+        layout, no per-chunk TakeOrdered over the remainder of the table,
+        no per-chunk count. Bounds and counts are fixed here: rows added
+        to the source after ``start`` may be handed over but are not
+        counted in ``processed_count``. Default
         ``None`` auto-enables it when the key column is numeric
         (approxQuantile's requirement); pass ``False`` to force the
         orderBy+limit cursor pager, which re-sorts the tail every chunk —
@@ -270,8 +291,8 @@ class TableIterator:
 
         - NULL keys are load-bearing in BOTH modes (a NULL never matches a
           range/page predicate; ``F.max`` ignores it, stalling the cursor).
-          The check is ``count(1) vs count(key)`` — one map-side aggregate,
-          no shuffle of data rows; its row count also sizes the ranges.
+          The check is ``count(1) vs count(key)`` — one job over the key
+          column, no shuffle; its row count also sizes the ranges.
         - Key UNIQUENESS only matters in cursor mode: the strict
           ``key > cursor`` page predicate skips duplicates that straddle a
           chunk boundary. Planned-range mode partitions the key space with
@@ -290,10 +311,13 @@ class TableIterator:
                 "tinyint", "smallint", "int", "bigint", "float", "double"
             ) or ktype.startswith("decimal")
         key = F.col(self.key_col)
-        stats = self.source.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(key).alias("n_nonnull"),
-        ).collect()[0]
+        # observed metrics of a noop write: one job with no exchange, where
+        # agg().collect() runs its shuffle stage as a second job under AQE
+        obs = Observation()
+        (self.source.select(key).observe(obs, F.count(F.lit(1)).alias("n"),
+                                         F.count(key).alias("n_nonnull"))
+         .write.format("noop").mode("overwrite").save())
+        stats = obs.get
         n = stats["n"]
         if stats["n_nonnull"] != n:
             raise ValueError(
@@ -302,7 +326,7 @@ class TableIterator:
                 "never be paged past (cursor would stall); clean or choose "
                 "another key"
             )
-        bounds = None
+        bounds = counts = None
         if plan_ranges:
             ranges = max(1, -(-n // batch_size))
             probs = [i / ranges for i in range(1, ranges)]
@@ -311,6 +335,8 @@ class TableIterator:
                 if probs
                 else []
             )
+            # one range holds every row: n is its count, no pass needed
+            counts = self._range_counts(bounds) if bounds else [n]
         else:
             dup = (
                 self.source.select(key.alias("k"))
@@ -338,9 +364,45 @@ class TableIterator:
             process_batch=process_batch,
             on_complete=on_complete,
             range_bounds=bounds,
+            range_counts=counts,
         )
         self.store.save(st)
         return st
+
+    def _range(self, bounds: list, idx: int) -> Column:
+        """Planned range ``idx``: keys in ``(bounds[idx-1], bounds[idx]]``,
+        unbounded below for the first range and above for the last. NULL
+        keys are in no range."""
+        key = F.col(self.key_col)
+        cond = key.isNotNull()
+        if idx > 0:
+            cond &= key > F.lit(bounds[idx - 1])
+        if idx < len(bounds):
+            cond &= key <= F.lit(bounds[idx])
+        return cond
+
+    def _range_counts(self, bounds: list) -> list[int]:
+        """Exact row count of every planned range, in one grouped count.
+
+        A row's range is the number of bounds below its key, found by a
+        binary search over the bounds as one array literal: a projection
+        per halving step, each making one ``bound < key`` comparison (the
+        chunks' own), so a row costs O(log ranges) comparisons and the
+        plan's expression count does not grow with the range count. NULL
+        keys are in no range."""
+        arr = F.from_json(F.lit(json.dumps([float(b) for b in bounds])), "array<double>")
+        k, i = F.col("k"), F.col("i")
+        df = self.source.select(F.col(self.key_col).alias("k")).filter(k.isNotNull())
+        df = df.withColumn("i", F.lit(0))
+        step = 1 << (len(bounds).bit_length() - 1) if bounds else 0
+        while step:  # invariant: the first i bounds are below the key
+            df = df.withColumn("i", F.when(F.try_element_at(arr, i + step) < k, i + step)
+                               .otherwise(i))
+            step //= 2
+        counts = [0] * (len(bounds) + 1)
+        for r in df.groupBy("i").count().collect():
+            counts[r["i"]] = r["count"]
+        return counts
 
     # --- the chunk loop (processNextBatch, lib.ts:968-1071) -----------------
 
@@ -348,7 +410,8 @@ class TableIterator:
         """getNextBatch default impl.
 
         Planned mode: cursor is a range index into the precomputed bounds —
-        chunk = pure range filter (scan-prunable, no sort).
+        chunk = pure range filter (scan-prunable, no sort), whose rows
+        ``_range_counts`` counted at ``start`` with the same comparisons.
         Cursor mode: ordered key page past the cursor value — the filter
         pushes to the scan; orderBy+limit compiles to TakeOrderedAndProject.
 
@@ -356,16 +419,10 @@ class TableIterator:
         ``key > cursor`` is never true and F.max skips them, stalling the
         cursor); ``start`` rejects them up front.
         """
+        if st.range_bounds is not None:
+            return self.source.filter(self._range(st.range_bounds, int(st.cursor or 0)))
         key = F.col(self.key_col)
         df = self.source.filter(key.isNotNull())
-        if st.range_bounds is not None:
-            idx = int(st.cursor or 0)
-            bounds = st.range_bounds
-            if idx > 0:
-                df = df.filter(key > F.lit(bounds[idx - 1]))
-            if idx < len(bounds):
-                df = df.filter(key <= F.lit(bounds[idx]))
-            return df
         if st.cursor is not None:
             df = df.filter(key > F.lit(st.cursor))
         return df.orderBy(key.asc()).limit(st.batch_size)
@@ -376,6 +433,15 @@ class TableIterator:
         Each iteration re-reads state (cooperative pause/cancel), processes
         one chunk through the registered handle, persists progress, sleeps
         the rate-limit delay, and applies capped-backoff retry on errors.
+
+        A planned chunk starts only the handle's Spark jobs: the handle
+        gets the range filter uncached, as the accumulator's handle gets
+        its epoch, and ``processed_count`` advances by the range's count
+        stored at ``start``. An empty range is skipped without a handle
+        call, a job or a rate-limit sleep. A planned job whose state has
+        no counts (saved before they were stored) counts its ranges once,
+        here, before its first chunk. A cursor chunk is persisted and
+        runs one progress job (max key, row count) besides the handle's.
         """
         first = self.store.load(job_id)
         if first.status == "running":
@@ -385,6 +451,11 @@ class TableIterator:
             self.registry.resolve(first.process_batch)
             if first.on_complete:
                 self.registry.resolve(first.on_complete)
+            if first.range_bounds is not None and first.range_counts is None:
+                counts = self._range_counts(first.range_bounds)
+                st = self.store.load(job_id)
+                st.range_counts = counts
+                self.store.save(st)
         chunks = 0
         while max_chunks is None or chunks < max_chunks:
             st = self.store.load(job_id)
@@ -393,19 +464,16 @@ class TableIterator:
             planned = st.range_bounds is not None
             if planned and int(st.cursor or 0) > len(st.range_bounds):
                 return self._complete(st)
-            # persist: the progress aggregate and the user handle both
-            # consume the chunk — without caching, each would re-execute the
-            # pager (two TakeOrdered scans of the remaining table per chunk)
-            chunk = self._next_chunk(st).persist()
             try:
-                rows = chunk.select(F.max(self.key_col).alias("mx"),
-                                    F.count(F.lit(1)).alias("n")).collect()[0]
-                n, max_key = rows["n"], rows["mx"]
-                if n == 0 and not planned:
-                    return self._complete(st)
                 handle = self.registry.resolve(st.process_batch)
-                if n > 0:
-                    handle(chunk, st.cursor)
+                if planned:
+                    n = st.range_counts[int(st.cursor or 0)]
+                    if n > 0:
+                        handle(self._next_chunk(st), st.cursor)
+                else:
+                    n, max_key = self._cursor_chunk(st, handle)
+                    if n == 0:
+                        return self._complete(st)
             except Exception as e:  # noqa: BLE001 — retry path (lib.ts:1046-1069)
                 st = self.store.load(job_id)
                 if st.status != "running":
@@ -428,8 +496,6 @@ class TableIterator:
                 self.sleep_fn(backoff_ms(st.retry_count) / 1000.0)
                 chunks += 1
                 continue
-            finally:
-                chunk.unpersist()
             # success: persist cursor/progress, reset retries (lib.ts:1073-1087)
             st = self.store.load(job_id)
             if planned:
@@ -451,8 +517,25 @@ class TableIterator:
                     return self._complete(self.store.load(job_id))
             elif n < st.batch_size:
                 return self._complete(self.store.load(job_id))
-            self.sleep_fn(st.delay_between_batches_s)  # rate limit (lib.ts:1039-1043)
+            if n > 0:
+                self.sleep_fn(st.delay_between_batches_s)  # rate limit (lib.ts:1039-1043)
         return self.store.load(job_id)
+
+    def _cursor_chunk(self, st: IteratorJobState, handle) -> tuple[int, Any]:
+        """One cursor-mode page through ``handle`` (not called for an
+        empty page): returns the page's row count and max key. The page
+        is persisted — the progress aggregate and the handle both consume
+        it, and without caching each would re-execute the pager (two
+        TakeOrdered scans of the remaining table per chunk)."""
+        chunk = self._next_chunk(st).persist()
+        try:
+            row = chunk.select(F.max(self.key_col).alias("mx"),
+                               F.count(F.lit(1)).alias("n")).collect()[0]
+            if row["n"] > 0:
+                handle(chunk, st.cursor)
+            return row["n"], row["mx"]
+        finally:
+            chunk.unpersist()
 
     def _complete(self, st: IteratorJobState) -> IteratorJobState:
         """markJobCompleted + onComplete dispatch (lib.ts:1011-1031).

@@ -34,6 +34,12 @@ parquet in memory and committed as ``part-<uuid>.snappy.parquet`` via a
 hidden ``_``-prefixed tmp file and a rename (``fsutil.write_bytes``).
 Flushes and views skip hidden names as Spark's listing does
 (``_hidden``), so no epoch admits a half-written add.
+
+Bookkeeping reads start no Spark job either: item counts (a flush's
+epoch size, the views' staged and per-batch counts) are the row counts
+in the staging files' parquet footers, and the views read the one-row
+history files on the driver (``_history_rows``). The only jobs a flush
+starts are the ones its handle runs.
 """
 
 from __future__ import annotations
@@ -47,7 +53,7 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote, urlparse
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -156,6 +162,15 @@ def _write_parquet_file(spark: SparkSession, directory: str, rows: list,
         os.path.join(directory, f"part-{uuid.uuid4()}.snappy.parquet"),
         sink.getvalue().to_pybytes(),
     )
+
+
+class _HistoryRow(NamedTuple):
+    """The flush-history columns the views read."""
+
+    epoch_id: int
+    item_count: int
+    success: bool
+    flushed_at: dt.datetime  # naive local time, as ``collect()`` returns it
 
 
 def _hidden(name: str) -> bool:
@@ -307,21 +322,19 @@ class BatchAccumulator:
                duration_ms, success, error)
         _write_parquet_file(self.spark, self.history_dir, [row], FLUSH_HISTORY_SCHEMA)
 
-    def _deliver(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _deliver(self, batch_df: DataFrame, epoch_id: int, count: int) -> None:
         """Epoch executor ≈ executeFlush (lib.ts:546-597): dispatch the
-        registered handle and record history; a handle failure is
-        recorded, then raised as ``RuntimeError`` so the epoch stays
-        uncommitted and replays (at-least-once, D5).
+        registered handle on the epoch's ``count`` items and record
+        history; a handle failure is recorded, then raised as
+        ``RuntimeError`` so the epoch stays uncommitted and replays
+        (at-least-once, D5).
 
-        The handle gets the epoch's frame UNCACHED: the pre-count needs
-        no column, so it reads only the epoch's parquet footers, and the
-        handle's own action is the one full scan. A handle that runs
-        several actions over the frame should ``persist`` it (and
-        ``unpersist`` before returning)."""
+        The handle gets the epoch's frame UNCACHED, and its own actions
+        are the only Spark jobs of the epoch: ``count`` comes from the
+        files' parquet footers. A handle that runs several actions over
+        the frame should ``persist`` it (and ``unpersist`` before
+        returning)."""
         handle = self.registry.resolve(self.process_batch)
-        count = batch_df.count()
-        if count == 0:
-            return  # empty-group short-circuit (lib.ts:157-159)
         start, failure = time.monotonic(), None
         try:
             handle(batch_df, epoch_id)
@@ -335,11 +348,17 @@ class BatchAccumulator:
             raise _EpochFailed(msg) from failure
 
     def _run_epoch(self, epoch_id: int, names) -> None:
-        """Deliver one LOGGED epoch: read exactly its files, count, run the
-        handle, write history, then commit. A crash before the commit leaves
-        the log entry, so the epoch replays with the same id and files."""
-        paths = [os.path.join(self.staging_dir, n) for n in sorted(names)]
-        self._deliver(self.spark.read.schema(self.item_schema).parquet(*paths), epoch_id)
+        """Deliver one LOGGED epoch: count its files' rows from their
+        footers, run the handle over exactly those files, write history,
+        then commit. An epoch with no rows is committed without a handle
+        call (the empty-group short-circuit, lib.ts:157-159). A crash
+        before the commit leaves the log entry, so the epoch replays with
+        the same id and files."""
+        count = sum(self._row_counts(names).values())
+        if count:
+            paths = [os.path.join(self.staging_dir, n) for n in sorted(names)]
+            df = self.spark.read.schema(self.item_schema).parquet(*paths)
+            self._deliver(df, epoch_id, count)
         commit = os.path.join(self.checkpoint_dir, "commits", str(epoch_id))
         fsutil.write_text(self.spark, commit, "")
 
@@ -398,13 +417,11 @@ class BatchAccumulator:
     def _epoch_log(self) -> dict[int, set[str]]:
         """Staging-file basenames per logged epoch (``epochs/N.json``)."""
         log = os.path.join(self.checkpoint_dir, "epochs")
-        out: dict[int, set[str]] = {}
-        for name in fsutil.listdir(self.spark, log):
-            stem, ext = os.path.splitext(name)
-            if ext == ".json" and stem.isdigit():  # not an in-flight ``_N.json.tmp``
-                text = fsutil.read_text(self.spark, os.path.join(log, name))
-                out[int(stem)] = set(json.loads(text))
-        return out
+        # not an in-flight ``_N.json.tmp``
+        names = [n for n in fsutil.listdir(self.spark, log)
+                 if n.endswith(".json") and n[:-5].isdigit()]
+        return {int(n[:-5]): set(json.loads(data))
+                for n, data in fsutil.read_files(self.spark, log, names).items()}
 
     def _staging(self) -> _Staging:
         """The one bookkeeping read behind each view and flush (see ``_Staging``)."""
@@ -420,26 +437,36 @@ class BatchAccumulator:
         )
 
     def _row_counts(self, names) -> dict[str, int]:
-        """Row count per staging parquet file among ``names``: ONE Spark
-        job for all of them (a listing must not cost O(epochs) jobs), and
-        none when there is no parquet file. Zero-row files do not appear.
-        ``ignoreMissingFiles``: a concurrent vacuum or delete_batch may
-        remove a file between the caller's listing and this read — a
-        control-plane count must degrade, not crash."""
-        paths = [
-            os.path.join(self.staging_dir, n) for n in sorted(names) if n.endswith(".parquet")
-        ]
-        if not paths:
-            return {}
-        rows = (
-            self.spark.read.schema(self.item_schema)
-            .option("ignoreMissingFiles", "true")
-            .parquet(*paths)
-            .groupBy(F.input_file_name().alias("_f"))
-            .count()
-            .collect()
-        )
-        return {os.path.basename(unquote(urlparse(r["_f"]).path)): r["count"] for r in rows}
+        """Row count per staging parquet file among ``names``, from the
+        files' footers on the driver: no Spark job. A concurrent vacuum or
+        delete_batch may remove a file between the caller's listing and
+        this read; such a file is left out (counts 0) — a control-plane
+        count must degrade, not crash."""
+        parquet = sorted(n for n in names if n.endswith(".parquet"))
+        return fsutil.parquet_row_counts(self.spark, self.staging_dir, parquet)
+
+    def _history_rows(self) -> list[_HistoryRow]:
+        """Every flush-history row, read on the driver (no Spark job): the
+        one shared reader behind ``status`` and ``list_batches``.
+        ``flushed_at`` is converted as ``collect()`` converts it, so the
+        views agree with ``flush_history()`` in any process time zone."""
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        names = [n for n in fsutil.listdir(self.spark, self.history_dir) if not _hidden(n)]
+        ts = T.TimestampType()
+        rows = []
+        for data in fsutil.read_files(self.spark, self.history_dir, names).values():
+            # ParquetFile.read: a quarter of read_table's per-file cost
+            t = pq.ParquetFile(pa.BufferReader(data)).read(columns=list(_HistoryRow._fields))
+            micros = t.column("flushed_at").cast(pa.int64()).to_pylist()
+            rows += [
+                _HistoryRow(e, n, ok, ts.fromInternal(at))
+                for e, n, ok, at in zip(t.column("epoch_id").to_pylist(),
+                                        t.column("item_count").to_pylist(),
+                                        t.column("success").to_pylist(), micros)
+            ]
+        return rows
 
     # --- D8 retention: delete flushed staging files -------------------------
 
@@ -504,8 +531,8 @@ class BatchAccumulator:
             return []  # nothing ever staged → no batch docs (lib.ts:251-253)
         s = self._staging()
         hist_at: dict[int, dt.datetime] = {}
-        for r in self.flush_history().collect():
-            hist_at.setdefault(r.epoch_id, r.flushed_at)  # newest-first order
+        for r in self._history_rows():
+            hist_at[r.epoch_id] = max(r.flushed_at, hist_at.get(r.epoch_id, r.flushed_at))
         counts = self._row_counts(s.files)
 
         # the reference's batch doc ALWAYS carries createdAt (schema.ts): an
@@ -593,23 +620,22 @@ class BatchAccumulator:
         Parity note: the reference's currentItemCount counts un-flushed
         items only (flushed rows are deleted, lib.ts:622-634), so pending
         here counts staging files NOT in committed epochs — computed on
-        demand, never stored (T3/schema.ts:9)."""
+        demand, never stored (T3/schema.ts:9).
+
+        Starts no Spark job: the staged count sums parquet footers and
+        the flush stats come from the history rows read on the driver
+        (``last_flush_at`` is the naive local datetime ``collect()``
+        returns). The cost grows with the number of history files, one
+        per epoch attempt."""
         staged = 0
         if self._has_staging():
             s = self._staging()
             staged = sum(self._row_counts(s.files.keys() - s.committed_files()).values())
-        # coalesce(1): the global aggregate then needs no exchange, so it is
-        # one job over the (tiny, control-plane) history rows, not two
-        hist = self.flush_history().coalesce(1)
-        agg = hist.agg(
-            F.count(F.lit(1)).alias("attempts"),
-            F.sum(F.when(F.col("success"), F.col("item_count")).otherwise(0)).alias("flushed_items"),
-            F.max("flushed_at").alias("last_flush_at"),
-        ).collect()[0]
+        history = self._history_rows()
         return {
             "batch_id": self.batch_id,
             "staged_item_count": staged,
-            "flush_attempts": agg["attempts"],
-            "flushed_items": agg["flushed_items"] or 0,
-            "last_flush_at": agg["last_flush_at"],
+            "flush_attempts": len(history),
+            "flushed_items": sum(r.item_count for r in history if r.success),
+            "last_flush_at": max((r.flushed_at for r in history), default=None),
         }

@@ -1,9 +1,8 @@
 """Default-tier smoke of the batch accumulator: one add -> flush ->
 status -> vacuum round through ``BatchProcessor`` whose first epoch
-attempt fails and is replayed, the Spark jobs the control plane starts,
-and hidden staging files. The client suite is in the slow tier; this
-keeps its accumulator path in every default run, beside the accumulator
-suite (``tests/test_accumulator.py``)."""
+attempt fails and is replayed, the Spark jobs the control plane starts
+(none), the footer-based item counts and driver-read history, and
+hidden staging files."""
 
 from __future__ import annotations
 
@@ -11,6 +10,7 @@ import datetime as dt
 import os
 import shutil
 import threading
+import time
 import uuid
 
 import pytest
@@ -18,7 +18,10 @@ from pyspark.sql import types as T
 
 from convex_batch_processor_spark.client import BatchProcessor
 from convex_batch_processor_spark.sources.registry import HandleRegistry
-from convex_batch_processor_spark.streaming.accumulator import BatchAccumulator
+from convex_batch_processor_spark.streaming.accumulator import (
+    BatchAccumulator,
+    _write_parquet_file,
+)
 
 SCHEMA = T.StructType(
     [
@@ -106,28 +109,108 @@ def _collecting_acc(spark, tmp_path, seen: list) -> BatchAccumulator:
                             item_schema=SCHEMA, process_batch="collect", registry=reg)
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs ``fn`` starts on this thread, counted under a job group."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_control_plane_starts_no_spark_job(spark, tmp_path):
-    acc = _collecting_acc(spark, tmp_path, [])
-    assert _jobs_started(spark, lambda: acc.add_items([{"event_id": 1, "name": "a"}])) == 0
-    assert _jobs_started(spark, lambda: acc._record_history(7, 1, 0, True, None)) == 0
-    assert acc.flush_now() is True
-    # the history aggregate is one single-partition job (no exchange)
-    assert _jobs_started(spark, acc.status) == 1
+def test_control_plane_starts_no_spark_job(spark, tmp_path, jobs_started):
+    """Adds, history rows, flush bookkeeping and the views start no Spark
+    job: the only jobs of a flush are its handle's, and this handle
+    starts none (it keeps the frame for later)."""
+    frames = []
+    reg = HandleRegistry()
+    reg.add("keep", lambda df, epoch_id: frames.append(df))
+    acc = BatchAccumulator(spark=spark, batch_id="b", root=str(tmp_path),
+                           item_schema=SCHEMA, process_batch="keep", registry=reg)
+    assert jobs_started(lambda: acc.add_items([{"event_id": 1, "name": "a"}])) == 0
+    assert jobs_started(lambda: acc._record_history(7, 1, 0, True, None)) == 0
+    assert jobs_started(acc.flush_now) == 0
+    assert jobs_started(acc.status) == 0
+    assert jobs_started(acc.list_batches) == 0
+    deleted = []
+    # the empty accumulating batch: its emptiness check counts no rows in a job
+    assert jobs_started(lambda: deleted.append(acc.delete_batch(1))) == 0
+    assert deleted == [{"deleted": True}]
     assert acc.status()["flush_attempts"] == 2
+    [df] = frames
+    assert [r.event_id for r in df.collect()] == [1]
+    [row] = acc.flush_history().filter("epoch_id = 0").collect()
+    assert (row.item_count, row.success) == (1, True)
+
+
+def test_zero_row_staged_file_is_an_empty_batch(spark, tmp_path):
+    """A zero-row staged parquet holds no items: the views count 0, the
+    empty-accumulating delete succeeds (delete_batch's emptiness
+    predicate is rows, not files), and a flush commits its epoch without
+    calling the handle or writing history."""
+    seen: list[int] = []
+    acc = _collecting_acc(spark, tmp_path, seen)
+    _write_parquet_file(spark, acc.staging_dir, [], SCHEMA)
+    assert acc.status()["staged_item_count"] == 0
+    [batch] = acc.list_batches()
+    assert (batch["status"], batch["item_count"]) == ("accumulating", 0)
+    assert acc.delete_batch(0) == {"deleted": True}
+    assert acc.list_batches() == []
+
+    assert acc.flush_now() is True
+    assert seen == []
+    assert os.path.exists(os.path.join(acc.checkpoint_dir, "commits", "0"))
+    assert acc.status()["flush_attempts"] == 0
+
+
+def test_file_vanished_after_listing_counts_zero(spark, tmp_path, monkeypatch):
+    """A staged file deleted between a view's listing and its count (a
+    concurrent vacuum or delete) counts 0; the view does not fail."""
+    acc = _collecting_acc(spark, tmp_path, [])
+    acc.add_items([{"event_id": i, "name": "a"} for i in range(2)])
+    acc.add_items([{"event_id": i, "name": "b"} for i in range(2, 5)])
+    snapshot = acc._staging()
+    victim = min(snapshot.files, key=lambda n: (snapshot.files[n], n))  # the first add
+    os.remove(os.path.join(acc.staging_dir, victim))
+    monkeypatch.setattr(acc, "_staging", lambda: snapshot)
+    assert acc.status()["staged_item_count"] == 3
+    [batch] = acc.list_batches()
+    assert batch["item_count"] == 3
+
+
+def test_multi_part_dataframe_add_is_counted(spark, tmp_path):
+    """``add_dataframe`` stages Spark-written part files; their footers
+    count them like driver-written ones, in the views and the flush."""
+    seen: list[int] = []
+    acc = _collecting_acc(spark, tmp_path, seen)
+    acc.add_dataframe(
+        spark.range(30).selectExpr("id AS event_id", "concat('e', id) AS name").repartition(3)
+    )
+    parts = [n for n in os.listdir(acc.staging_dir)
+             if n.endswith(".parquet") and not n.startswith((".", "_"))]
+    assert len(parts) > 1
+    assert acc.status()["staged_item_count"] == 30
+    [batch] = acc.list_batches()
+    assert batch["item_count"] == 30
+    assert acc.flush_now() is True
+    assert sorted(seen) == list(range(30))
+    [row] = acc.flush_history().collect()
+    assert (row.item_count, row.success) == (30, True)
+    assert acc.status()["flushed_items"] == 30
+
+
+def test_last_flush_at_matches_history_in_local_time(spark, tmp_path, monkeypatch):
+    """``status`` and ``list_batches`` read history on the driver; their
+    timestamps equal what ``collect()`` returns from ``flush_history()``
+    (naive local datetimes) in a process time zone other than UTC."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        acc = _collecting_acc(spark, tmp_path, [])
+        for i in range(2):
+            acc.add_items([{"event_id": i, "name": "a"}])
+            acc.flush_now()
+        acc.vacuum_staging()  # completed batches then fall back to history times
+        history = acc.flush_history().collect()
+        assert acc.status()["last_flush_at"] == max(r.flushed_at for r in history)
+        done = [b for b in acc.list_batches() if b["status"] == "completed"]
+        assert [b["created_at"] for b in done] == [
+            max(r.flushed_at for r in history if r.epoch_id == b["sequence"]) for b in done
+        ]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_hidden_staging_files_are_not_batch_contents(spark, tmp_path):

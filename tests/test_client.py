@@ -5,9 +5,6 @@ accumulation + users migration iterator)."""
 from __future__ import annotations
 
 import pytest
-
-# slow tier: excluded from the default run (pytest.ini); run with -m ""
-pytestmark = pytest.mark.slow
 from pyspark.sql import types as T
 
 from convex_batch_processor_spark.catalog import load_table
@@ -108,6 +105,18 @@ def test_facade_guards(spark, tmp_path):
     with pytest.raises(KeyError, match="unknown iterator"):
         bp.get_iterator_status("nope")
     assert bp.list_iterator_jobs() == []
+
+
+def test_remote_root_keeps_accumulators_and_refuses_iterator_state(spark):
+    """Accumulators go through the Hadoop FS, so a remote root builds
+    them; iterator job state is driver-local, so only the iterator
+    surface refuses that root, on first use. Nothing here touches the
+    remote store."""
+    bp = BatchProcessor(spark=spark, root="s3a://bucket/root")
+    acc = bp.accumulator("ev", EVENT_SCHEMA, "noop")
+    assert acc.root == "s3a://bucket/root/batches/ev"
+    with pytest.raises(ValueError, match="driver-local"):
+        bp.list_iterator_jobs()
 
 
 def test_facade_sees_persisted_jobs_across_instances(spark, sf_dir, tmp_path):

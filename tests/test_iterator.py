@@ -5,13 +5,17 @@ tests assert the exact rate-limit/backoff schedule without wall-clock."""
 
 from __future__ import annotations
 
+import bisect
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from convex_batch_processor_spark.catalog import load_table
 from convex_batch_processor_spark.client import BatchProcessor
-from convex_batch_processor_spark.iterator import TableIterator, backoff_ms
+from convex_batch_processor_spark.iterator import JobStore, TableIterator, backoff_ms
 from convex_batch_processor_spark.sources.registry import HandleRegistry
 
 
@@ -160,32 +164,143 @@ def test_start_rejects_null_and_duplicate_keys(tmp_path, customer):
 def test_planned_ranges_accept_duplicate_keys_without_row_loss(tmp_path, customer):
     """Planned-range mode partitions the key space with inclusive bounds,
     so duplicate keys are processed exactly once each — no uniqueness pass
-    is needed (or run) on the default 100 TB path."""
-    reg, seen = HandleRegistry(), []
-    reg.add("collect", lambda df, c: seen.extend(r.k for r in df.collect()))
+    is needed (or run) on the default 100 TB path. Every key appears
+    several times, so the bound is a duplicated key: all its copies land
+    in the range it closes, and each chunk holds exactly the count stored
+    for its range at start."""
+    reg, chunks = HandleRegistry(), []
+    reg.add("collect", lambda df, c: chunks.append([r.k for r in df.collect()]))
     dup = customer.select((F.col("c_custkey") % 50).alias("k"))
     n = dup.count()
     it = TableIterator(str(tmp_path / "p"), dup, "k", registry=reg, sleep_fn=lambda s: None)
     st = it.start("j", "collect", batch_size=100)  # numeric -> planned
     assert st.range_bounds is not None
+    assert dup.filter(F.col("k") == st.range_bounds[0]).count() > 1
     st = it.run("j")
     assert st.status == "completed"
-    assert len(seen) == n == st.processed_count
+    assert [len(c) for c in chunks] == [c for c in st.range_counts if c]
+    assert sum(len(c) for c in chunks) == n == st.processed_count
 
 
-def test_numeric_key_auto_plans_ranges_and_caches_chunks(tmp_path, customer):
+def test_range_counts_at_many_ranges_match_the_chunk_predicates(spark, tmp_path,
+                                                                jobs_started):
+    """1500 planned ranges over a double key with negative values and
+    repeated keys: the stored counts equal a binary search over the
+    stored bounds, each sampled range's chunk predicate selects exactly
+    its count, and start's job count does not grow with the range
+    count."""
+    src = spark.range(6000).selectExpr("CAST(id * 7919 % 2003 - 1000 AS DOUBLE) / 4 AS k")
+    keys = [r.k for r in src.collect()]
+    it = TableIterator(str(tmp_path / "jobs"), src, "k", sleep_fn=lambda s: None)
+    out = []
+    jobs = jobs_started(lambda: out.append(it.start("many", "noop", batch_size=4)))
+    bounds, counts = out[0].range_bounds, out[0].range_counts
+    assert len(counts) == len(bounds) + 1 >= 1000
+    expected = [0] * len(counts)
+    for k in keys:
+        expected[bisect.bisect_left(bounds, k)] += 1
+    assert counts == expected and sum(counts) == len(keys)
+    for i in (0, 1, 500, 999, len(bounds) - 1, len(bounds)):
+        assert src.filter(it._range(bounds, i)).count() == counts[i]
+    # the NULL/size check, approxQuantile and the grouped range count
+    assert jobs <= 5
+
+
+def _run_chunks(it, job_id, jobs_started) -> list[tuple[int, object]]:
+    """Run ``job_id`` one chunk per call to a terminal state; returns
+    (Spark jobs started, state) per call."""
+    calls = []
+    while not calls or calls[-1][1].status == "running":
+        out = []
+        calls.append((jobs_started(lambda: out.append(it.run(job_id, max_chunks=1))), out[0]))
+    return calls
+
+
+def test_numeric_key_auto_plans_ranges_and_hands_chunks_uncached(
+    tmp_path, customer, jobs_started
+):
     """Default mode for a numeric key is the planned-range pager (one
-    approxQuantile pass, then pure range filters); each chunk is persisted
-    so the progress aggregate and the user handle share one scan."""
-    reg, levels = HandleRegistry(), []
-    reg.add("probe", lambda df, c: levels.append(df.storageLevel.useMemory))
+    approxQuantile pass and one range-count pass at start, then pure
+    range filters). Each chunk reaches the handle uncached and starts
+    only the handle's jobs — none for this handle, which keeps the frame
+    for later — and progress advances by the counts fixed at start."""
+    reg, frames = HandleRegistry(), []
+    reg.add("keep", lambda df, c: frames.append(df))
     it = make_iter(tmp_path, customer, reg, [])
-    st = it.start("auto", "probe", batch_size=40)
+    st = it.start("auto", "keep", batch_size=40)
     assert st.range_bounds is not None  # c_custkey is numeric -> planned
-    st = it.run("auto")
+    assert len(st.range_counts) == len(st.range_bounds) + 1
+    calls = _run_chunks(it, "auto", jobs_started)
+    assert [jobs for jobs, _ in calls] == [0] * len(calls)
+    st = calls[-1][1]
     assert st.status == "completed"
-    assert st.processed_count == customer.count()
-    assert levels and all(levels)  # every chunk handed over persisted
+    assert not any(df.storageLevel.useMemory for df in frames)
+    assert [df.count() for df in frames] == [n for n in st.range_counts if n]
+    keys = [r.c_custkey for df in frames for r in df.collect()]
+    assert st.processed_count == len(keys) == customer.count()
+    assert sorted(keys) == sorted(r.c_custkey for r in customer.collect())
+
+
+def test_empty_range_makes_no_handle_call_and_no_job(spark, tmp_path, jobs_started):
+    """One key value for every row: the bounds collapse onto it, so all
+    rows fall in the first range and the others are empty. An empty
+    range is skipped with no handle call, no Spark job and no sleep."""
+    reg, calls, sleeps = HandleRegistry(), [], []
+    reg.add("collect", lambda df, c: calls.append((c, df.count())))
+    src = spark.range(300).selectExpr("id", "7 AS k")
+    it = TableIterator(str(tmp_path / "jobs"), src, "k", registry=reg, sleep_fn=sleeps.append)
+    st = it.start("one-key", "collect", batch_size=100, delay_between_batches_s=0.5)
+    assert st.range_counts == [300, 0, 0]
+    st = it.run("one-key", max_chunks=1)
+    assert calls == [(0, 300)] and st.processed_count == 300
+    steps = _run_chunks(it, "one-key", jobs_started)
+    assert [jobs for jobs, _ in steps] == [0, 0]
+    assert calls == [(0, 300)]
+    assert steps[-1][1].status == "completed"
+    assert steps[-1][1].processed_count == src.count()
+    assert sleeps == [0.5]  # only after the chunk that had rows
+
+
+def test_planned_state_without_counts_resumes(tmp_path, customer):
+    """A planned job saved before range counts were stored counts its
+    ranges on its first run and then finishes every row exactly once."""
+    reg, seen = HandleRegistry(), []
+    reg.add("collect", lambda df, c: seen.extend(r.c_custkey for r in df.collect()))
+    it = make_iter(tmp_path, customer, reg, [])
+    it.start("legacy", "collect", batch_size=40, plan_ranges=True)
+    it.run("legacy", max_chunks=1)
+    path = tmp_path / "jobs" / "legacy.json"
+    state = json.loads(path.read_text())
+    counts = state.pop("range_counts")
+    path.write_text(json.dumps(state))
+
+    resumed = make_iter(tmp_path, customer, reg, [])
+    assert resumed.store.load("legacy").range_counts is None
+    st = resumed.run("legacy")
+    assert st.status == "completed"
+    assert st.range_counts == counts
+    assert st.processed_count == len(seen) == customer.count()
+    assert sorted(seen) == sorted(r.c_custkey for r in customer.collect())
+
+
+def test_job_store_maps_file_uris_and_rejects_other_schemes(spark, tmp_path, monkeypatch,
+                                                            customer):
+    """A ``file:`` URI root keeps iterator state beside the accumulator's,
+    under the URI's local path; a remote scheme is refused, since job
+    state is driver-local."""
+    monkeypatch.chdir(tmp_path)  # a URI taken as a relative path lands here
+    root = tmp_path / "root"
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, c: None)
+    bp = BatchProcessor(spark=spark, root=root.as_uri(), registry=reg)
+    bp.accumulator("ev", customer.schema, "noop").add_dataframe(customer.limit(1))
+    bp.start_iterator("j", customer, "c_custkey", "noop", run=False)
+    assert os.path.exists(root / "jobs" / "j.json")
+    assert os.path.isdir(root / "batches" / "ev" / "staging")
+    assert os.listdir(tmp_path) == ["root"]
+    with pytest.raises(ValueError, match="driver-local"):
+        JobStore("s3a://bucket/jobs")
+    assert os.listdir(tmp_path) == ["root"]
 
 
 def test_status_list_delete(tmp_path, customer):
