@@ -112,9 +112,9 @@ def test_remote_root_keeps_accumulators_and_refuses_iterator_state(spark):
     them; iterator job state is driver-local, so only the iterator
     surface refuses that root, on first use. Nothing here touches the
     remote store."""
-    bp = BatchProcessor(spark=spark, root="s3a://bucket/root")
+    bp = BatchProcessor(spark=spark, root="s3a://bucket/base")
     acc = bp.accumulator("ev", EVENT_SCHEMA, "noop")
-    assert acc.root == "s3a://bucket/root/batches/ev"
+    assert acc.root == "s3a://bucket/base/batches/ev"
     with pytest.raises(ValueError, match="driver-local"):
         bp.list_iterator_jobs()
 
