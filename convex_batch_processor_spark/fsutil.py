@@ -89,11 +89,6 @@ def is_dir(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jp)) and bool(fs.getFileStatus(jp).isDirectory())
 
 
-def mkdirs(spark: SparkSession, path: str) -> None:
-    fs, jp = _fs_path(spark, path)
-    fs.mkdirs(jp)
-
-
 def listdir(spark: SparkSession, path: str) -> list[str]:
     """Child basenames of a directory (non-recursive); [] if absent."""
     fs, jp = _fs_path(spark, path)
@@ -122,14 +117,6 @@ def list_statuses(spark: SparkSession, path: str) -> dict[str, float]:
         st.getPath().getName(): st.getModificationTime() / 1000.0
         for st in fs.listStatus(jp)
     }
-
-
-def content_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under a path (recursive); 0 if absent."""
-    fs, jp = _fs_path(spark, path)
-    if not fs.exists(jp):
-        return 0
-    return int(fs.getContentSummary(jp).getLength())
 
 
 def read_text(spark: SparkSession, path: str) -> str:
@@ -219,8 +206,8 @@ def write_bytes(spark: SparkSession, path: str, data: bytes,
     pair with unique names so a half-committed file is never read).
     Overwriting an EXISTING path is NOT atomic (Hadoop rename won't
     replace: there is a delete-then-rename window) — callers must opt in
-    with ``overwrite=True`` and tolerate the window; streaming/verstore.py
-    avoids it entirely by never rewriting a committed manifest."""
+    with ``overwrite=True`` and tolerate the window; the accumulator's
+    epoch log avoids it entirely by never rewriting a committed entry."""
     fs, jp = _fs_path(spark, path)
     if fs.exists(jp) and not overwrite:
         raise FileExistsError(f"{path} exists (pass overwrite=True for the "

@@ -182,21 +182,31 @@ class JobStore:
             raise KeyError(f"unknown iterator job {job_id!r}") from None
 
     def delete(self, job_id: str) -> bool:
-        """deleteIteratorJob (lib.ts:927-945): only terminal jobs."""
-        if not self.exists(job_id):
+        """deleteIteratorJob (lib.ts:927-945): only terminal jobs. False
+        when the job is gone, also when another store on the same
+        directory deletes it first."""
+        try:
+            st = self.load(job_id)
+        except KeyError:
             return False
-        st = self.load(job_id)
         if st.status not in ("completed", "failed"):
             raise ValueError(f"cannot delete job in status {st.status!r}")
-        os.remove(self._path(job_id))
+        try:
+            os.remove(self._path(job_id))
+        except FileNotFoundError:
+            return False
         return True
 
     def list(self, status: str | None = None) -> list[IteratorJobState]:
-        """listIteratorJobs (lib.ts:898-925): optional status filter."""
+        """listIteratorJobs (lib.ts:898-925): optional status filter. A job
+        deleted between the listing and its load is left out."""
         out = []
         for fn in sorted(os.listdir(self.state_dir)):
             if fn.endswith(".json"):
-                st = self.load(fn[:-5])
+                try:
+                    st = self.load(fn[:-5])
+                except KeyError:
+                    continue
                 if status is None or st.status == status:
                     out.append(st)
         return out

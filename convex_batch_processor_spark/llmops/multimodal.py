@@ -15,11 +15,10 @@ PNG is fully real too (stdlib zlib IS the codec — attach_png_payload /
 decode_png_features), and so is GIF (the LZW compressor/decompressor is
 implemented here outright — attach_gif_payload / decode_gif_features,
 variable code widths, clear/EOI, 4096-entry dictionary reset). Remaining
-compressed codecs (JPEG/H.264) are NOT in this
-container, so ``payload_byte_features`` / ``frame_sample`` below are
-deterministic stand-ins with the real Spark plumbing (schema, batching,
-partitioning) in place; swap the body for PIL/pyav on a real cluster.
-The deliberately-fake parts are marked STUB.
+compressed codecs (JPEG/H.264) are NOT in this container, so
+``payload_byte_features`` below is a deterministic stand-in with the real
+Spark plumbing (schema, batching, partitioning) in place; swap the body
+for PIL/pyav on a real cluster.
 
 AUDIO and (since round 4) IMAGES are the exceptions:
 - the stdlib ``wave`` module is a real PCM WAV codec, so
@@ -517,7 +516,7 @@ def _avi_dec(every_n: int = 2):
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:
                     # exploded per-frame output: a missing payload has no
-                    # frames — zero rows, same as frame_sample's stub
+                    # frames — zero rows
                     continue
                 b = bytes(payload)
                 magic, riff_size, kind = struct.unpack_from("<4sI4s", b, 0)
@@ -606,29 +605,6 @@ def _avi_dec(every_n: int = 2):
             yield pd.DataFrame(out)
 
     return dec
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Generic frame-sampling plumbing for CODED payloads (H.264 etc. —
-    codecs not in this container). STUB decode: emits (doc_id, frame_idx,
-    frame_bytes=None) for every ``every_n``-th 'frame', where frame count is
-    derived from payload length. Real impl: pyav keyframe iteration inside
-    the same mapInPandas contract. For UNCOMPRESSED AVI the real path
-    exists: ``decode_video_frames`` above."""
-    schema = "doc_id long, frame_idx int, frame_bytes binary"
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = 0 if payload is None else len(payload) // 64
-                for i in range(0, n_frames, every_n):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_bytes"].append(None)  # STUB: no codec in container
-            yield pd.DataFrame(rows)
-
-    return df.select("doc_id", "payload").mapInPandas(sample, schema)
 
 
 def attach_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -55,7 +55,7 @@ def interval_join_bucketed(
     # integer `div`, NOT floor(double /): double division loses low bits
     # past 2^53 µs (timestamps outside ~1684-2255), which could land a
     # true match outside {lb, lb+1} before the exact filter runs — the
-    # same trap write_zordered's bucket key avoids. Floor semantics for
+    # same trap zorder_layout_stats' bucket key avoids. Floor semantics for
     # negative epochs via the mod correction (div truncates toward zero).
     def _floor_div_us(col_name: str):
         us = F.unix_micros(F.col(col_name))

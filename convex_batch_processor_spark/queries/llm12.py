@@ -7,11 +7,10 @@ Registered last in queries/__init__.py (after llm11); all oracle-backed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..sources.sinks import morton_interleave, morton_interleave_sql
 from .registry import register
 
 
@@ -25,6 +24,36 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 _Z_BITS = 8
 _Z_BUCKET_SHIFT = 10  # 16-bit code >> 10 = 64 coarse buckets
+
+
+def morton_interleave(xn: Column, yn: Column, bits: int = 8) -> Column:
+    """Morton (Z-order) code of two NORMALIZED non-negative int columns in
+    [0, 2^bits): bit i of x lands at position 2i+1, bit i of y at 2i.
+    Pure integer shifts/masks — exact and engine-portable.
+
+    Z-ordering is the multi-column clustering trick (Delta OPTIMIZE
+    ZORDER BY, Hudi, Iceberg sort orders): sorting by the interleaved code
+    gives every contiguous file range a BOUNDED span in BOTH dimensions,
+    so min/max file stats prune on either predicate — a plain sort only
+    prunes its leading column."""
+    code = F.lit(0).cast("long")
+    for i in range(bits):
+        code = (
+            code
+            + F.shiftleft(F.shiftright(xn.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i + 1)
+            + F.shiftleft(F.shiftright(yn.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
+        )
+    return code
+
+
+def morton_interleave_sql(x: str, y: str, bits: int = 8) -> str:
+    """The same Morton code as DuckDB-SQL text (oracle twin of
+    :func:`morton_interleave`)."""
+    terms = []
+    for i in range(bits):
+        terms.append(f"((({x} >> {i}) & 1) << {2 * i + 1})")
+        terms.append(f"((({y} >> {i}) & 1) << {2 * i})")
+    return "(" + " + ".join(terms) + ")"
 
 
 @register(
@@ -59,7 +88,8 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering audit: interleave normalized
     (customer, order-day) into a 16-bit code, bucket by its top bits, and
     report each bucket's span in BOTH dimensions — the min/max file-stats
-    a Z-ordered layout (sinks.write_zordered) would give every file.
+    a layout range-partitioned and sorted on the code would give every
+    file.
     Every bucket bounds customer range AND date range simultaneously,
     which is what lets either predicate prune files; a plain sort bounds
     only its leading column.

@@ -54,8 +54,7 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     One key-partitioned window (rank state O(1) per key), tombstones
     filtered AFTER the rank so a delete that is not last never
     resurrects. Scale: single shuffle on the key; composes with
-    incremental_dedup_delta for the delta-vs-base variant and with
-    sinks.upsert_partitioned for the write."""
+    incremental_dedup_delta for the delta-vs-base variant."""
     ev = _t(spark, sf_dir, "events")
     log = ev.select(
         "user_id",

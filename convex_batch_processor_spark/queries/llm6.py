@@ -316,7 +316,7 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, frame_idx, dims, n_frames, fps, per-channel means). The
     video stub is retired: this decoder handles any uncompressed
     DIB-frames AVI (foreign-file test in tests/test_multimodal_codecs.py);
-    only compressed codecs (H.264/VP9) remain stubbed in frame_sample.
+    compressed codecs (H.264/VP9) are not decoded.
 
     The oracle never sees the bytes: dimensions, frame count, timing, and
     pixels are closed-form in doc_id, so SQL predicts what a correct

@@ -156,9 +156,9 @@ def salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of a fair {_PARTS}-way partition, whether they exceed the
     {_HOT_FACTOR}x straggler threshold, and the salt fan-out that would
     level them — the per-key decision layer above partition_skew_audit's
-    aggregate balance report, feeding an explicit salting stage
-    (operators/skew.py) or corroborating AQE's runtime choice. A
-    uniform corpus correctly reports needs_salt = false for every key.
+    aggregate balance report, feeding an explicit salting stage or
+    corroborating AQE's runtime choice. A uniform corpus correctly
+    reports needs_salt = false for every key.
 
     Scale: one key-count aggregation + a TakeOrdered(10) — the advisory
     never materializes more than the hot tail."""

@@ -1,1 +1,1 @@
-"""Sources/sinks: parquet staging ingestion + callback handle registry."""
+"""Sources: the callback handle registry."""

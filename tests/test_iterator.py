@@ -15,7 +15,12 @@ from pyspark.sql import types as T
 
 from convex_batch_processor_spark.catalog import load_table
 from convex_batch_processor_spark.client import BatchProcessor
-from convex_batch_processor_spark.iterator import JobStore, TableIterator, backoff_ms
+from convex_batch_processor_spark.iterator import (
+    IteratorJobState,
+    JobStore,
+    TableIterator,
+    backoff_ms,
+)
 from convex_batch_processor_spark.sources.registry import HandleRegistry
 
 
@@ -301,6 +306,26 @@ def test_job_store_maps_file_uris_and_rejects_other_schemes(spark, tmp_path, mon
     with pytest.raises(ValueError, match="driver-local"):
         JobStore("s3a://bucket/jobs")
     assert os.listdir(tmp_path) == ["root"]
+
+
+def test_list_and_delete_skip_a_job_another_store_deleted(tmp_path, monkeypatch):
+    """Two stores on one directory (two ``BatchProcessor``s on one root):
+    a job the other store deletes between this store's listing and its
+    load is left out of ``list``, and ``delete`` reports it gone."""
+    store, other = JobStore(str(tmp_path)), JobStore(str(tmp_path))
+    for job_id in ("a", "b"):
+        store.save(IteratorJobState(job_id=job_id, status="completed"))
+    load = store.load
+
+    def racing_load(job_id):
+        other.delete(job_id)  # lands after the caller's listing or exists()
+        return load(job_id)
+
+    monkeypatch.setattr(store, "load", racing_load)
+    assert store.list() == []
+    store.save(IteratorJobState(job_id="c", status="completed"))
+    assert store.delete("c") is False
+    assert os.listdir(tmp_path) == []
 
 
 def test_status_list_delete(tmp_path, customer):

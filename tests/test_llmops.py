@@ -116,15 +116,6 @@ def test_multimodal_payload_roundtrip_and_features(spark, sf_dir):
     assert abs(frow.feat_mean - sum(raw) / len(raw)) < 1e-9
 
 
-def test_frame_sample_stub_shapes(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    frames = M.frame_sample(M.attach_payload(docs), every_n=2)
-    rows = frames.collect()
-    assert rows, "frame sampling should emit rows for non-empty payloads"
-    assert frames.columns == ["doc_id", "frame_idx", "frame_bytes"]
-    assert all(r.frame_idx % 2 == 0 for r in rows)
-
-
 def test_label_centroids_match_numpy(spark, sf_dir):
     import numpy as np
 
@@ -157,54 +148,6 @@ def test_ivf_assign_empty_centroids_returns_zero_rows(spark, sf_dir):
     assert ivf_assign(emb, no_cents).count() == 0
 
 
-def test_salted_agg_equals_plain_agg(spark, sf_dir):
-    from pyspark.sql import functions as F2
-
-    from convex_batch_processor_spark.operators.skew import salted_agg
-
-    li = load_table(spark, sf_dir, "lineitem")
-    plain = {
-        r.l_returnflag: (r.n, r.sq, r.mx)
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F2.count(F2.lit(1)).alias("n"),
-            F2.sum(F2.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sq"),
-            F2.max("l_shipdate").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        r.l_returnflag: (r.n, r.sq, r.mx)
-        for r in salted_agg(
-            li,
-            ["l_returnflag"],
-            {
-                "n": F2.count(F2.lit(1)),
-                "sq": F2.sum(F2.col("l_quantity").cast("decimal(18,2)")).cast("double"),
-                "mx": F2.max("l_shipdate"),
-            },
-            salt_buckets=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    from convex_batch_processor_spark.plans import explain as E
-    from convex_batch_processor_spark.sources.sinks import read_partitioned, write_partitioned
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, out, ["lang"])
-    back = read_partitioned(spark, out)
-    assert back.count() == docs.count()
-    pruned = back.filter(F.col("lang") == "de")
-    plan = E.physical_plan(pruned)
-    # partition filter handled at planning: only lang=de directories scanned
-    assert pruned.count() == docs.filter(F.col("lang") == "de").count()
-    assert "PartitionFilters" in plan or "lang=de" in plan or "PartitionCount: 1" in plan
-
-
 def test_grouped_map_zscore_matches_window_form(spark, sf_dir):
     from pyspark.sql import Window
 
@@ -223,28 +166,6 @@ def test_grouped_map_zscore_matches_window_form(spark, sf_dir):
     assert set(got) == set(expected)
     for eid, z in expected.items():
         assert abs(got[eid] - z) < 1e-4
-
-
-def test_salted_agg_rejects_distinct_and_avg(spark, sf_dir):
-    """Regression (code-review finding): countDistinct must be refused,
-    not silently overcounted."""
-    import pytest as pt
-    from pyspark.sql import functions as F2
-
-    from convex_batch_processor_spark.operators.skew import salted_agg
-
-    ev = load_table(spark, sf_dir, "events")
-    with pt.raises(ValueError, match="DISTINCT"):
-        salted_agg(ev, ["event_type"], {"d": F2.countDistinct("user_id")})
-    with pt.raises(ValueError, match="decomposable"):
-        salted_agg(ev, ["event_type"], {"a": F2.avg("value")})
-    # cast-wrapped DISTINCT: toString() drops the qualifier ("CAST(count(x)
-    # AS BIGINT)"), so only a node-tree walk catches it — a string probe
-    # would merge it with sum and silently overcount
-    with pt.raises(ValueError, match="DISTINCT"):
-        salted_agg(
-            ev, ["event_type"], {"d": F2.countDistinct("user_id").cast("long")}
-        )
 
 
 def test_char_trigrams_short_text(spark):
@@ -424,40 +345,3 @@ def test_unicode_and_mojibake_probes_null_text(spark):
     rows = {r.doc_id: r for r in probed}
     assert rows[1].np.nfc_delta is None and rows[1].rl is None
     assert rows[2].np.nfc_delta is not None and rows[2].rl is not None
-
-
-def test_salted_agg_rejects_min_by(spark, sf_dir):
-    """Review r6 (confirmed wrong result): min_by prints as
-    'min_by(x, y)' and rode the bare 'min' prefix into a plain-min
-    merge, silently returning the wrong row's value — it is not
-    decomposable and must be refused loudly."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F2
-
-    from convex_batch_processor_spark.operators.skew import salted_agg
-
-    li = load_table(spark, sf_dir, "lineitem").limit(100)
-    with _pytest.raises(ValueError, match="decomposable"):
-        salted_agg(
-            li, ["l_returnflag"], {"xm": F2.min_by("l_quantity", "l_extendedprice")}
-        ).collect()
-
-
-def test_salted_agg_rejects_cast_wrapped_count_min_sketch(spark, sf_dir):
-    """Regression (r8 operators review): 'cast(count_min_sketch(...' must
-    not ride an unanchored 'cast(count' prefix into the sum-merge branch —
-    non-decomposable aggregates refuse loudly even when cast-wrapped."""
-    import pytest as pt
-    from pyspark.sql import functions as F2
-
-    from convex_batch_processor_spark.operators.skew import salted_agg
-
-    ev = load_table(spark, sf_dir, "events")
-    with pt.raises(ValueError, match="decomposable"):
-        salted_agg(
-            ev,
-            ["event_type"],
-            {"sk": F2.count_min_sketch(
-                "user_id", F2.lit(0.1), F2.lit(0.01), F2.lit(1)
-            ).cast("string")},
-        )

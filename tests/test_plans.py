@@ -103,34 +103,6 @@ def test_dedup_exact_single_exchange(spark, sf_dir):
     assert E.count_exchanges(df) <= 1
 
 
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key join with ZERO shuffle
-    exchanges — the co-located-join contract (pre-shuffled storage)."""
-    from pyspark.sql import functions as F
-
-    from convex_batch_processor_spark.catalog import load_table
-    from convex_batch_processor_spark.sources.sinks import write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        write_bucketed(orders.select("o_orderkey", "o_totalprice"), "b_orders", "o_orderkey")
-        write_bucketed(
-            li.select("l_orderkey", "l_quantity"), "b_lineitem", "l_orderkey"
-        )
-        joined = (
-            spark.table("b_orders")
-            .join(spark.table("b_lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
-        )
-        assert E.count_exchanges(joined) == 0, E.physical_plan(joined)
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_q9_broadcasts_dims_and_prunes_part_name(spark, sf_dir):
     """q9: the LIKE filter reaches the part scan; part/supplier/nation are
     broadcast; the only exchanges belong to lineitem<->orders + the agg."""

@@ -1,8 +1,11 @@
 """Package reachability guard: every package module is imported, eagerly or
 lazily, from an entry point (the registry, the client, the driver entry,
 the benchmarks or the gate scripts), or is listed in ``UNREACHED`` with the
-reason it stays. A second check keeps every package import under ``tests/``
-resolvable, which ``--collect-only`` cannot see for lazy in-test imports.
+reason it stays. Within the reached modules, every undecorated top-level
+function and class is named somewhere in the reached code outside its own
+body, or is listed in ``UNREFERENCED`` with the reason it stays. A third
+check keeps every package import under ``tests/`` resolvable, which
+``--collect-only`` cannot see for lazy in-test imports.
 
 Static only: the walk reads source with ``ast``; it imports nothing and
 starts no Spark session.
@@ -11,6 +14,7 @@ starts no Spark session.
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -33,15 +37,29 @@ ROOTS = [
 # Package modules no root reaches, each with the reason it stays. The set is
 # exact: a newly unreached module fails the test, and so does deleting a
 # listed module without taking it off this list.
-_FLOOR = "reached only by its default-tier tests (ROADMAP direction 4)"
 UNREACHED = {
-    "streaming.cdc": _FLOOR,
-    "streaming.verstore": _FLOOR,
-    "streaming.joins": _FLOOR,
-    "sources.formats": _FLOOR,
-    "operators.skew": _FLOOR,
     "plans": "package of plans.explain",
     "plans.explain": "plan-assertion helper for test_plans and test_warehouse_ops",
+}
+
+# Undecorated top-level functions and classes of reached modules that no
+# reached code names, each with the reason it stays. Exact, like UNREACHED.
+_REFERENCE = "unfused reference that test_multimodal_fused checks the fused decoders against"
+UNREFERENCED = {
+    "operators.graph.connected_components_star": (
+        "drop-in fallback that connected_components' non-convergence error names"
+    ),
+    **{
+        f"llmops.multimodal.{name}": _REFERENCE
+        for name in (
+            "attach_wav_payload", "decode_audio_features",
+            "attach_bmp_payload", "decode_image_features",
+            "attach_avi_payload", "decode_video_frames",
+            "attach_png_payload", "decode_png_features",
+            "attach_gif_payload", "decode_gif_features",
+            "attach_warc_payload", "decode_warc_records",
+        )
+    },
 }
 
 
@@ -129,6 +147,61 @@ def test_every_package_module_is_reached_or_listed():
     assert unreached == set(UNREACHED), (
         f"newly unreached: {sorted(unreached - set(UNREACHED))}; "
         f"listed but reached or gone: {sorted(set(UNREACHED) - unreached)}"
+    )
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    """ids of the docstring constants of a module and its defs."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                out.add(id(body[0].value))
+    return out
+
+
+def _names(node: ast.AST, docstrings: set[int]) -> Counter:
+    """Identifiers ``node`` names: names, attributes, ``from`` imports and
+    identifier-shaped string constants (docstrings excluded)."""
+    out = Counter()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            out[n.attr] += 1
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.isidentifier()
+            and id(n) not in docstrings
+        ):
+            out[n.value] += 1
+    return out
+
+
+def test_every_package_function_is_referenced_or_listed():
+    trees = {mod: _parse(_file(mod)) for mod in _closure()}
+    named = Counter()
+    for tree in trees.values():
+        named.update(_names(tree, _docstrings(tree)))
+    prefix = f"{PKG}."
+    unreferenced = set()
+    for mod in _package_modules() & trees.keys():
+        tree = trees[mod]
+        docstrings = _docstrings(tree)
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+                and named[node.name] == _names(node, docstrings)[node.name]
+            ):
+                unreferenced.add(f"{mod.removeprefix(prefix)}.{node.name}")
+    assert unreferenced == set(UNREFERENCED), (
+        f"newly unreferenced: {sorted(unreferenced - set(UNREFERENCED))}; "
+        f"listed but referenced or gone: {sorted(set(UNREFERENCED) - unreferenced)}"
     )
 
 

@@ -1,157 +1,14 @@
-"""Partition-scoped upsert (S10 at scale): only partitions containing
-patched keys are rewritten; every other partition's files stay
-byte-identical on disk."""
+"""The Morton (Z-order) coder behind ``zorder_layout_stats``."""
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import functions as F
 
-from convex_batch_processor_spark.catalog import load_table
-from convex_batch_processor_spark.sources.sinks import upsert_partitioned
-
-
-def _partition_fingerprint(root: str, part_dir: str) -> dict[str, str]:
-    """filename -> sha256 for every data file under one partition dir."""
-    out = {}
-    d = os.path.join(root, part_dir)
-    for fn in os.listdir(d):
-        p = os.path.join(d, fn)
-        if os.path.isfile(p) and not fn.startswith((".", "_")):
-            with open(p, "rb") as f:
-                out[fn] = hashlib.sha256(f.read()).hexdigest()
-    return out
-
-
-def test_upsert_rewrites_only_affected_partitions(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "orders_by_status")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    orders.write.partitionBy("o_orderstatus").parquet(path)
-
-    before = {
-        s: _partition_fingerprint(path, f"o_orderstatus={s}") for s in ("O", "F")
-    }
-
-    # patch: reprice every 'P' order, insert one brand-new 'P' order
-    patch = (
-        orders.filter(F.col("o_orderstatus") == "P")
-        .withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        .unionByName(
-            spark.createDataFrame(
-                [(10_000_000, 42.0, "P")],
-                "o_orderkey long, o_totalprice double, o_orderstatus string",
-            )
-        )
-    )
-    n_p_before = orders.filter(F.col("o_orderstatus") == "P").count()
-    affected = upsert_partitioned(
-        spark, path, patch, key_cols=["o_orderkey"], partition_col="o_orderstatus"
-    )
-    assert affected == ["P"]
-
-    # untouched partitions: identical file names AND identical bytes
-    after = {
-        s: _partition_fingerprint(path, f"o_orderstatus={s}") for s in ("O", "F")
-    }
-    assert after == before
-
-    # patched partition has the merge result: doubled prices + the insert
-    got = spark.read.parquet(path)
-    p = got.filter(F.col("o_orderstatus") == "P")
-    assert p.count() == n_p_before + 1
-    assert p.filter(F.col("o_orderkey") == 10_000_000).count() == 1
-    # untouched rows unchanged, table-wide key uniqueness preserved
-    assert got.count() == orders.count() + 1
-    assert got.select("o_orderkey").distinct().count() == got.count()
-    expect_p_sum = (
-        orders.filter(F.col("o_orderstatus") == "P")
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s"))
-        .collect()[0]["s"]
-    )
-    got_p_sum = (
-        p.filter(F.col("o_orderkey") != 10_000_000)
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s"))
-        .collect()[0]["s"]
-    )
-    assert float(got_p_sum) == float(expect_p_sum) * 2
-
-
-def test_compact_to_size_preserves_rows_and_clusters(spark, sf_dir, tmp_path):
-    """Size-aware compaction: many tiny files -> few size-targeted files,
-    same rows; order_by clustering makes per-file key ranges disjoint so
-    min/max pruning can skip files."""
-    from convex_batch_processor_spark.sources.sinks import compact_to_size
-
-    src = str(tmp_path / "tiny")
-    out = str(tmp_path / "compacted")
-    orders = load_table(spark, sf_dir, "orders")
-    orders.repartition(40).write.parquet(src)  # 40 tiny files
-    n_before = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-    assert n_before == 40
-
-    n_req = compact_to_size(spark, src, out, target_file_mb=1, order_by=["o_orderkey"])
-    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert len(files) == n_req < n_before
-    assert spark.read.parquet(out).count() == orders.count()
-
-    # clustering: file-level [min,max] o_orderkey ranges must not overlap
-    ranges = []
-    for f in files:
-        stats = (
-            spark.read.parquet(os.path.join(out, f))
-            .agg(F.min("o_orderkey"), F.max("o_orderkey"))
-            .collect()[0]
-        )
-        ranges.append((stats[0], stats[1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping file ranges {hi1} > {lo2}"
-
-
-def test_foreach_partition_push_delivers_every_row_once(spark, sf_dir, tmp_path):
-    """The push sink must hand EVERY row to the handler exactly once, in
-    chunks no larger than batch_size, with one handler per partition."""
-    import glob
-    import os
-    import uuid
-
-    from convex_batch_processor_spark.catalog import load_table
-    from convex_batch_processor_spark.sources.sinks import foreach_partition_push
-
-    out_dir = str(tmp_path / "pushed")
-    os.makedirs(out_dir)
-
-    def make_handler():
-        # runs on the executor: one "connection" (file) per partition
-        path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.txt")
-
-        def handle(rows):
-            assert len(rows) <= 40
-            with open(path, "a") as f:
-                for r in rows:
-                    f.write(f"{r.o_orderkey}\n")
-
-        return handle
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey").repartition(4)
-    foreach_partition_push(orders, make_handler, batch_size=40)
-
-    pushed = []
-    for p in glob.glob(os.path.join(out_dir, "part-*.txt")):
-        with open(p) as f:
-            pushed.extend(int(x) for x in f.read().split())
-    expected = sorted(r.o_orderkey for r in orders.collect())
-    assert sorted(pushed) == expected
-    assert len(glob.glob(os.path.join(out_dir, "part-*.txt"))) <= 4
+from convex_batch_processor_spark.queries.llm12 import morton_interleave
 
 
 def test_morton_interleave_matches_python_reference(spark):
     """Bit-interleave spot check against a pure-python morton coder."""
-    from convex_batch_processor_spark.sources.sinks import morton_interleave
 
     def py_morton(x, y, bits=8):
         c = 0
@@ -162,93 +19,7 @@ def test_morton_interleave_matches_python_reference(spark):
 
     pts = [(0, 0), (255, 255), (1, 0), (0, 1), (170, 85), (200, 13)]
     df = spark.createDataFrame(pts, "x long, y long")
-    got = {
-        (r.x, r.y): r.z
-        for r in df.select("x", "y", morton_interleave("x", "y").alias("z")).collect()
-    }
+    z = morton_interleave(F.col("x"), F.col("y")).alias("z")
+    got = {(r.x, r.y): r.z for r in df.select("x", "y", z).collect()}
     for x, y in pts:
         assert got[(x, y)] == py_morton(x, y)
-
-
-def test_write_zordered_preserves_rows_and_bounds_both_dims(spark, sf_dir, tmp_path):
-    """Z-ordered layout: lossless, and each output FILE spans a bounded
-    fraction of BOTH clustering dimensions (the property that makes
-    min/max stats prune on either predicate)."""
-    import pyspark.sql.functions as F
-
-    from convex_batch_processor_spark.catalog import load_table
-    from convex_batch_processor_spark.sources.sinks import write_zordered
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", F.datediff(F.col("o_orderdate").cast("date"),
-                                              F.lit("2024-01-01").cast("date")).alias("dd")
-    )
-    b = orders.agg(
-        F.min("o_custkey"), F.max("o_custkey"), F.min("dd"), F.max("dd")
-    ).first()
-    out = str(tmp_path / "zord")
-    write_zordered(orders, out, "o_custkey", "dd", b[0], b[1], b[2], b[3], num_files=8)
-
-    back = spark.read.parquet(out)
-    assert back.count() == orders.count()
-    assert set(r.o_orderkey for r in back.select("o_orderkey").collect()) == set(
-        r.o_orderkey for r in orders.select("o_orderkey").collect()
-    )
-
-    per_file = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("o_custkey") - F.min("o_custkey")).alias("ck_span"),
-            (F.max("dd") - F.min("dd")).alias("dd_span"),
-        )
-        .collect()
-    )
-    ck_full = (b[1] - b[0]) or 1
-    dd_full = (b[3] - b[2]) or 1
-    assert len(per_file) >= 4
-    # files must bound BOTH dims well below the full span ON AVERAGE — a
-    # plain single-column sort leaves the second dim at ~full span in
-    # every file. (Individual files CAN span a dimension fully: range
-    # boundaries come from sampling, not bit-aligned splits, so a file
-    # straddling a top-bit flip is legitimate.)
-    mean_ck = sum(r.ck_span for r in per_file) / len(per_file)
-    mean_dd = sum(r.dd_span for r in per_file) / len(per_file)
-    assert mean_ck <= ck_full * 0.6, (mean_ck, ck_full)
-    assert mean_dd <= dd_full * 0.6, (mean_dd, dd_full)
-
-
-def test_upsert_partitioned_null_partition_keeps_unpatched_rows(spark, tmp_path):
-    """Review r6 (confirmed data loss): isin(affected) is NULL — never
-    true — for the NULL partition, so its existing rows were excluded
-    from the merge while dynamic overwrite still rewrote
-    __HIVE_DEFAULT_PARTITION__ with only the patch rows."""
-    from convex_batch_processor_spark.sources.sinks import upsert_partitioned
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", None), (2, "b", None), (3, "c", "d1")],
-        "k long, v string, dt string",
-    ).write.partitionBy("dt").parquet(path)
-    patch = spark.createDataFrame([(1, "A", None)], "k long, v string, dt string")
-    upsert_partitioned(spark, path, patch, key_cols=["k"], partition_col="dt")
-    got = {(r.k, r.v, r.dt) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "A", None), (2, "b", None), (3, "c", "d1")}
-
-
-def test_upsert_partitioned_replaces_null_key_rows(spark, tmp_path):
-    """MERGE semantics on NULL merge keys: a bare column-name anti-join
-    never matches NULL = NULL, so the old NULL-key row survived AND the
-    patch row was unioned in — a silent duplicate. The null-safe join
-    must REPLACE it."""
-    from convex_batch_processor_spark.sources.sinks import upsert_partitioned
-
-    path = str(tmp_path / "nullkey")
-    spark.createDataFrame(
-        [(None, "a", 1), (5, "a", 10)], "k long, part string, v long"
-    ).write.partitionBy("part").parquet(path)
-    patch = spark.createDataFrame(
-        [(None, "a", 2)], "k long, part string, v long"
-    )
-    upsert_partitioned(spark, path, patch, key_cols=["k"], partition_col="part")
-    rows = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {(None, 2), (5, 10)}, rows

@@ -125,77 +125,3 @@ def test_approx_sketches_within_error_bounds(spark, sf_dir):
         ap = approx[flag]
         assert abs(ap.approx_parts - ex.d) / ex.d < 0.1
         assert abs(ap.approx_median_price - ex.med) / ex.med < 0.1
-
-
-def test_streaming_append_watermark_drops_late_events(spark, tmp_path):
-    """Append mode + watermark late-data contract (§2.9 D-series in
-    streaming form). Spark's guarantee is one-directional: a late row is
-    only GUARANTEED dropped once its window's state has been evicted
-    (docs: "data older than watermark may or may not be aggregated while
-    state is live"). So the scenario is three micro-batches: (1) fill
-    windows, (2) advance the watermark past their end — eviction emits
-    them exactly once, (3) late rows for an evicted window arrive — they
-    must be discarded, never re-opening or re-emitting the window."""
-    import os
-    import time
-
-    day = 86400
-    t0 = 1_600_000_000
-
-    def rows(*secs):
-        return spark.createDataFrame(
-            [(1, s, 1.0) for s in secs], "user_id long, epoch long, value double"
-        ).select("user_id", F.timestamp_seconds("epoch").alias("ts"), "value")
-
-    src_dir = tmp_path / "late_stream"
-    src_dir.mkdir()
-    # batch 1: 2 events day 1, 3 events day 5
-    rows(t0 + 10, t0 + 20, t0 + 4 * day, t0 + 4 * day + 5, t0 + 4 * day + 9).coalesce(
-        1
-    ).write.parquet(str(src_dir / "f1"))
-    # batch 2: day 12 — watermark moves to day 10, evicting+emitting day 1/5
-    rows(t0 + 11 * day).coalesce(1).write.parquet(str(src_dir / "f2"))
-    # batch 3: 5 LATE day-1 events (evicted window) + 1 fresh day-13 event
-    rows(t0 + 30, t0 + 40, t0 + 50, t0 + 60, t0 + 70, t0 + 12 * day).coalesce(
-        1
-    ).write.parquet(str(src_dir / "f3"))
-    # FileStreamSource admits oldest-mtime first; stamp the DATA files so
-    # maxFilesPerTrigger=1 yields f1 -> f2 -> f3
-    now = time.time()
-    for d, age in ((src_dir / "f1", 120), (src_dir / "f2", 60), (src_dir / "f3", 0)):
-        for fn in os.listdir(d):
-            if fn.endswith(".parquet"):
-                os.utime(d / fn, (now - age, now - age))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    agg = (
-        stream.withWatermark("ts", "2 days")
-        .groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").cast("long").alias("win_start"), "n")
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("late_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_late"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = spark.sql("SELECT * FROM late_out").collect()
-    win_of = lambda s: s - (s % day)  # noqa: E731
-    # every window emitted at most once (late rows never re-emit a window)
-    assert len({r.win_start for r in out}) == len(out)
-    emitted = {r.win_start: r.n for r in out}
-    # day-1 window: exactly once, WITHOUT the 5 late events
-    assert emitted[win_of(t0)] == 2
-    assert emitted[win_of(t0 + 4 * day)] == 3
-    # day-12/13 windows never closed -> not emitted
-    assert win_of(t0 + 11 * day) not in emitted
-    assert win_of(t0 + 12 * day) not in emitted
