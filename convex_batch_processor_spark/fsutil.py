@@ -26,12 +26,19 @@ Measured warm on a 4-core host (``local[2]``, local FS, 2 KB files):
 about 1 ms per file for ``read_files`` and 1.6 ms for
 ``parquet_row_counts``. Parquet's own ``ParquetFileReader.open`` took
 17 ms per file there, so the footer is parsed by pyarrow instead.
+
+Writes cost more. A warm ``write_text`` of a 100-byte file (tmp create,
+write, close, rename) took 8.8 ms median (7.5–13 ms over 40 calls) on
+the same host (Hadoop 3.4.2, native library not loaded), where one
+local ``setPermission`` call alone took 3 ms. An ``os`` tmp write and
+``os.replace`` of the same bytes took 0.04 ms.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+import uuid
 from typing import NamedTuple
 
 from py4j.protocol import Py4JJavaError
@@ -201,7 +208,9 @@ def write_bytes(spark: SparkSession, path: str, data: bytes,
     """Write a file via a hidden tmp sibling + rename; missing parent
     dirs are created. The tmp name starts with ``_``, so Spark's file
     listing (batch reads and the streaming file source alike) never sees
-    a half-written file. For a NEW path the rename is an atomic commit
+    a half-written file, and is unique per call (``_<name>.<uuid>.tmp``),
+    so a concurrent writer of the same path never truncates this one's
+    bytes before its rename. For a NEW path the rename is an atomic commit
     (atomic on HDFS/local posix; on S3-style stores it is copy+delete —
     pair with unique names so a half-committed file is never read).
     Overwriting an EXISTING path is NOT atomic (Hadoop rename won't
@@ -213,7 +222,7 @@ def write_bytes(spark: SparkSession, path: str, data: bytes,
         raise FileExistsError(f"{path} exists (pass overwrite=True for the "
                               "non-atomic replace path)")
     head, name = os.path.split(path)
-    tmp_path = os.path.join(head, f"_{name}.tmp")
+    tmp_path = os.path.join(head, f"_{name}.{uuid.uuid4().hex}.tmp")
     tmp = _jvm_classes(spark).Path(tmp_path)
     stream = fs.create(tmp, True)
     try:

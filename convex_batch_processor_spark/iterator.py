@@ -2,29 +2,31 @@
 (SURVEY.md §2.9 D10-D14; reference src/component/lib.ts:736-1132).
 
 Reference semantics: start a job that repeatedly pulls a page via a user
-``getNextBatch`` callback, hands it to ``processBatch``, persists cursor +
+``getNextBatch`` callback, hands it to ``processBatch``, saves cursor +
 processedCount, rate-limits between chunks, retries failures with capped
 exponential backoff (min(1000·2^n, 30000) ms, lib.ts:1059), honors
 pause/resume/cancel between chunks, and fires ``onComplete`` at the end.
 
 Spark design:
 - **Cursor = ordered key range**, not an opaque token (Convex cursors are
-  not reproducible; a sorted unique key is). A chunk is
-  ``WHERE key > cursor ORDER BY key LIMIT n`` — with sorted/partitioned
-  parquet this prunes to the row groups past the cursor (min/max stats), so
-  chunk cost does not grow with table size. At 100 TB you'd additionally
-  precompute range boundaries once (approxQuantile) instead of per-chunk
-  TakeOrdered; both forms below. A planned chunk is the range filter
-  itself, handed to the handle uncached: its row count was fixed at
-  ``start``, so the chunk runs no job of its own. A cursor chunk is
-  persisted, because a progress job (the page's max key and row count)
-  and the handle both read it.
+  not reproducible; a sorted unique key is). Every chunk is the range
+  filter ``key in (lo, hi]`` on the source, handed to the handle uncached
+  and unordered; with sorted/partitioned parquet it prunes to the row
+  groups in range (min/max stats), so chunk cost does not grow with table
+  size. Planned mode (the 100 TB form) fixes every range's bounds
+  (approxQuantile) and row count once at ``start``, so its chunks run no
+  job of their own. Cursor mode finds each chunk's upper bound and row
+  count with one job over the key column alone
+  (``key > cursor ORDER BY key LIMIT n``, then max and count).
 - **Job state** lives in a JSON file per job (atomic rename) in
-  ``JobStore``, which also owns the lifecycle transitions — the control
-  plane is driver-side metadata exactly like streaming checkpoints; the
-  data path stays fully distributed (the callback receives the chunk
-  DataFrame, which it may write/aggregate cluster-wide; collecting is the
-  callback's choice, mirroring the reference handing items arrays).
+  ``JobStore``, which also owns the lifecycle transitions. Every change
+  to a stored job is a load-change-save under one lock, so a pause or
+  cancel never overwrites, or is overwritten by, the loop's own saves —
+  the control plane is driver-side metadata exactly like streaming
+  checkpoints; the data path stays fully distributed (the callback
+  receives the chunk DataFrame, which it may write/aggregate
+  cluster-wide; collecting is the callback's choice, mirroring the
+  reference handing items arrays).
 - **processBatch / getNextBatch / onComplete** are registry handle NAMES
   stored in the job state (function-handles-as-data, schema.ts:50-55).
 
@@ -34,6 +36,8 @@ done/paused/failed, so tests drive it deterministically without threads.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import math
 import os
@@ -144,13 +148,15 @@ class JobStore:
     """Atomic JSON-file-per-job state store (the iteratorJobs table) and
     the lifecycle transitions on it, which need no source DataFrame.
 
-    Driver-local by design: job state is single-writer driver control
-    state (the reference keeps it in its transactional store,
-    lib.ts:898-945). On a cluster, point state_dir at a driver-attached
-    volume; the data-plane (chunks, handles) never touches it. A
-    ``file:`` URI names its local path (so a ``BatchProcessor`` rooted at
-    a ``file:`` URI keeps both subsystems under one directory); any other
-    scheme is a ValueError."""
+    Driver-local by design: job state is driver control state (the
+    reference keeps it in its transactional store, lib.ts:898-945). On a
+    cluster, point state_dir at a driver-attached volume; the data-plane
+    (chunks, handles) never touches it. A ``file:`` URI names its local
+    path (so a ``BatchProcessor`` rooted at a ``file:`` URI keeps both
+    subsystems under one directory); any other scheme is a ValueError.
+    Stores, threads and processes sharing the directory change a job only
+    under an exclusive lock on ``<state_dir>/.lock`` (``insert``,
+    ``update``), so no change overwrites another."""
 
     def __init__(self, state_dir: str):
         url = urlparse(state_dir)
@@ -165,8 +171,31 @@ class JobStore:
     def _path(self, job_id: str) -> str:
         return os.path.join(self.state_dir, f"{check_name('iterator job id', job_id)}.json")
 
-    def exists(self, job_id: str) -> bool:
-        return os.path.exists(self._path(job_id))
+    def check_new(self, job_id: str) -> None:
+        """ValueError if ``job_id`` names a stored job."""
+        if os.path.exists(self._path(job_id)):
+            raise ValueError(f"Iterator job with ID '{job_id}' already exists")
+
+    @contextlib.contextmanager
+    def _locked(self):
+        with open(os.path.join(self.state_dir, ".lock"), "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)  # released when the file closes
+            yield
+
+    def insert(self, state: IteratorJobState) -> None:
+        """Save a new job; its id is checked under the lock (``check_new``)."""
+        with self._locked():
+            self.check_new(state.job_id)
+            self.save(state)
+
+    def update(self, job_id: str, change) -> IteratorJobState:
+        """Load the job, apply ``change(state)`` and save it, under the
+        lock; returns the saved state. ``change`` must not call the store."""
+        with self._locked():
+            st = self.load(job_id)
+            change(st)
+            self.save(st)
+        return st
 
     def save(self, state: IteratorJobState) -> None:
         tmp = self._path(state.job_id) + ".tmp"
@@ -213,14 +242,14 @@ class JobStore:
 
     def _transition(self, job_id: str, allowed: tuple[str, ...], to: str,
                     **patch) -> IteratorJobState:
-        st = self.load(job_id)
-        if st.status not in allowed:
-            expected = " or ".join(map(repr, allowed))
-            raise ValueError(f"job {job_id!r} is {st.status!r}, expected {expected}")
-        st.status = to
-        st.__dict__.update(patch)
-        self.save(st)
-        return st
+        def change(st):
+            if st.status not in allowed:
+                expected = " or ".join(map(repr, allowed))
+                raise ValueError(f"job {job_id!r} is {st.status!r}, expected {expected}")
+            st.status = to
+            st.__dict__.update(patch)
+
+        return self.update(job_id, change)
 
     def pause(self, job_id: str) -> IteratorJobState:
         """pauseIterator (lib.ts:784-806): running → paused; takes effect at
@@ -252,7 +281,7 @@ class JobStore:
 
 class TableIterator:
     """Drives chunked iteration over an ordered DataFrame: ``start`` plans
-    and persists a job, ``run`` is the chunk loop. Lifecycle transitions
+    and saves a job, ``run`` is the chunk loop. Lifecycle transitions
     and status live on ``store``."""
 
     def __init__(
@@ -313,8 +342,7 @@ class TableIterator:
           means the shuffle carries one row per DISTINCT key, not an Expand
           of the table like ``countDistinct`` alongside ``count`` would).
         """
-        if self.store.exists(job_id):
-            raise ValueError(f"Iterator job with ID '{job_id}' already exists")
+        self.store.check_new(job_id)  # before any Spark job; insert re-checks
         if plan_ranges is None:
             ktype = self.source.schema[self.key_col].dataType.simpleString()
             plan_ranges = ktype in (
@@ -376,20 +404,8 @@ class TableIterator:
             range_bounds=bounds,
             range_counts=counts,
         )
-        self.store.save(st)
+        self.store.insert(st)
         return st
-
-    def _range(self, bounds: list, idx: int) -> Column:
-        """Planned range ``idx``: keys in ``(bounds[idx-1], bounds[idx]]``,
-        unbounded below for the first range and above for the last. NULL
-        keys are in no range."""
-        key = F.col(self.key_col)
-        cond = key.isNotNull()
-        if idx > 0:
-            cond &= key > F.lit(bounds[idx - 1])
-        if idx < len(bounds):
-            cond &= key <= F.lit(bounds[idx])
-        return cond
 
     def _range_counts(self, bounds: list) -> list[int]:
         """Exact row count of every planned range, in one grouped count.
@@ -416,42 +432,53 @@ class TableIterator:
 
     # --- the chunk loop (processNextBatch, lib.ts:968-1071) -----------------
 
-    def _next_chunk(self, st: IteratorJobState) -> DataFrame:
-        """getNextBatch default impl.
-
-        Planned mode: cursor is a range index into the precomputed bounds —
-        chunk = pure range filter (scan-prunable, no sort), whose rows
-        ``_range_counts`` counted at ``start`` with the same comparisons.
-        Cursor mode: ordered key page past the cursor value — the filter
-        pushes to the scan; orderBy+limit compiles to TakeOrderedAndProject.
-
-        NULL keys are excluded in both modes (they cannot be paged past —
-        ``key > cursor`` is never true and F.max skips them, stalling the
-        cursor); ``start`` rejects them up front.
-        """
-        if st.range_bounds is not None:
-            return self.source.filter(self._range(st.range_bounds, int(st.cursor or 0)))
+    def _range(self, lo, hi) -> Column:
+        """Keys in ``(lo, hi]``; a ``None`` bound leaves that side open.
+        NULL keys are in no range (``start`` rejects them: ``key > cursor``
+        is never true for one and F.max skips it, stalling the cursor)."""
         key = F.col(self.key_col)
-        df = self.source.filter(key.isNotNull())
-        if st.cursor is not None:
-            df = df.filter(key > F.lit(st.cursor))
-        return df.orderBy(key.asc()).limit(st.batch_size)
+        cond = key.isNotNull()
+        if lo is not None:
+            cond &= key > F.lit(lo)
+        if hi is not None:
+            cond &= key <= F.lit(hi)
+        return cond
+
+    def _chunk(self, st: IteratorJobState) -> tuple[int, Any, Any]:
+        """getNextBatch default impl: ``(rows, lo, hi)``, the next chunk
+        being the rows with keys in ``(lo, hi]``. Planned mode reads them
+        from the state (cursor indexes the bounds), with no job. Cursor
+        mode pages the next ``batch_size`` keys past the cursor in one job
+        over the key column (TakeOrderedAndProject under a max and count);
+        its keys are unique (``start`` checks), so ``(lo, hi]`` holds
+        exactly the paged rows."""
+        if st.range_bounds is not None:
+            i, bounds = int(st.cursor or 0), st.range_bounds
+            return (st.range_counts[i], bounds[i - 1] if i > 0 else None,
+                    bounds[i] if i < len(bounds) else None)
+        key = self.key_col
+        row = (self.source.filter(self._range(st.cursor, None)).select(key)
+               .orderBy(key).limit(st.batch_size)
+               .agg(F.max(key).alias("hi"), F.count(F.lit(1)).alias("n")).collect()[0])
+        return row["n"], st.cursor, row["hi"]
 
     def run(self, job_id: str, max_chunks: int | None = None) -> IteratorJobState:
         """Drive the job until completed/paused/failed (or max_chunks).
 
         Each iteration re-reads state (cooperative pause/cancel), processes
-        one chunk through the registered handle, persists progress, sleeps
+        one chunk through the registered handle, saves progress, sleeps
         the rate-limit delay, and applies capped-backoff retry on errors.
 
-        A planned chunk starts only the handle's Spark jobs: the handle
-        gets the range filter uncached, as the accumulator's handle gets
-        its epoch, and ``processed_count`` advances by the range's count
-        stored at ``start``. An empty range is skipped without a handle
-        call, a job or a rate-limit sleep. A planned job whose state has
-        no counts (saved before they were stored) counts its ranges once,
-        here, before its first chunk. A cursor chunk is persisted and
-        runs one progress job (max key, row count) besides the handle's.
+        In both modes the handle gets the chunk's range filter on the
+        source, uncached and unordered, as the accumulator's handle gets
+        its epoch, and ``processed_count`` advances by the chunk's rows.
+        A planned chunk starts only the handle's Spark jobs; a cursor
+        chunk adds the one paging job. An empty planned range is skipped
+        without a handle call, a job or a rate-limit sleep. A planned job
+        whose state has no counts (saved before they were stored) counts
+        its ranges once, here, before its first chunk. Progress and
+        failures are saved with ``JobStore.update`` and leave the status
+        and error of a pause or cancel that landed mid-chunk alone.
         """
         first = self.store.load(job_id)
         if first.status == "running":
@@ -463,9 +490,7 @@ class TableIterator:
                 self.registry.resolve(first.on_complete)
             if first.range_bounds is not None and first.range_counts is None:
                 counts = self._range_counts(first.range_bounds)
-                st = self.store.load(job_id)
-                st.range_counts = counts
-                self.store.save(st)
+                self.store.update(job_id, lambda st: setattr(st, "range_counts", counts))
         chunks = 0
         while max_chunks is None or chunks < max_chunks:
             st = self.store.load(job_id)
@@ -473,94 +498,64 @@ class TableIterator:
                 return st
             planned = st.range_bounds is not None
             if planned and int(st.cursor or 0) > len(st.range_bounds):
-                return self._complete(st)
+                return self._complete(job_id)
             try:
                 handle = self.registry.resolve(st.process_batch)
-                if planned:
-                    n = st.range_counts[int(st.cursor or 0)]
-                    if n > 0:
-                        handle(self._next_chunk(st), st.cursor)
-                else:
-                    n, max_key = self._cursor_chunk(st, handle)
-                    if n == 0:
-                        return self._complete(st)
+                n, lo, hi = self._chunk(st)
+                if n > 0:
+                    handle(self.source.filter(self._range(lo, hi)), st.cursor)
+                elif not planned:
+                    return self._complete(job_id)
             except Exception as e:  # noqa: BLE001 — retry path (lib.ts:1046-1069)
-                st = self.store.load(job_id)
+                error = f"{type(e).__name__}: {e}"
+
+                def failed(st):
+                    if st.status == "running":
+                        st.retry_count += 1
+                        st.error_message = error
+                        if st.retry_count >= st.max_retries:
+                            st.status = "failed"
+
+                st = self.store.update(job_id, failed)
                 if st.status != "running":
-                    # a pause/cancel that landed mid-chunk OWNS the status and
-                    # its error_message — the failure path must honor the
-                    # transition exactly like the success path below (never
-                    # flip a paused job to 'failed' or scrub 'Cancelled by
-                    # user' with the in-flight handle's exception)
                     return st
-                st.retry_count += 1
-                if st.retry_count >= st.max_retries:
-                    st.status = "failed"
-                    st.error_message = f"{type(e).__name__}: {e}"
-                    self.store.save(st)
-                    return st
-                st.error_message = f"{type(e).__name__}: {e}"
-                self.store.save(st)
                 # post-increment count, matching newRetryCount in lib.ts:1050:
                 # first retry sleeps 2000 ms
                 self.sleep_fn(backoff_ms(st.retry_count) / 1000.0)
                 chunks += 1
                 continue
-            # success: persist cursor/progress, reset retries (lib.ts:1073-1087)
-            st = self.store.load(job_id)
-            if planned:
-                st.cursor = int(st.cursor or 0) + 1
-            else:
-                st.cursor = max_key
-            st.processed_count += n
-            if st.status == "running":
-                # a cancel/pause that landed mid-chunk owns the status AND
-                # its error_message ("Cancelled by user") — record the
-                # chunk's real progress but never scrub the transition
-                st.retry_count = 0
-                st.error_message = None
-            st.last_run_at = time.time()
-            self.store.save(st)
+
+            def advance(st):  # success: save progress, reset retries (lib.ts:1073-1087)
+                st.cursor = int(st.cursor or 0) + 1 if planned else hi
+                st.processed_count += n
+                if st.status == "running":
+                    st.retry_count = 0
+                    st.error_message = None
+                st.last_run_at = time.time()
+
+            st = self.store.update(job_id, advance)
             chunks += 1
-            if planned:
-                if st.cursor > len(st.range_bounds):
-                    return self._complete(self.store.load(job_id))
-            elif n < st.batch_size:
-                return self._complete(self.store.load(job_id))
+            if (st.cursor > len(st.range_bounds)) if planned else (n < st.batch_size):
+                return self._complete(job_id)
             if n > 0:
                 self.sleep_fn(st.delay_between_batches_s)  # rate limit (lib.ts:1039-1043)
         return self.store.load(job_id)
 
-    def _cursor_chunk(self, st: IteratorJobState, handle) -> tuple[int, Any]:
-        """One cursor-mode page through ``handle`` (not called for an
-        empty page): returns the page's row count and max key. The page
-        is persisted — the progress aggregate and the handle both consume
-        it, and without caching each would re-execute the pager (two
-        TakeOrdered scans of the remaining table per chunk)."""
-        chunk = self._next_chunk(st).persist()
-        try:
-            row = chunk.select(F.max(self.key_col).alias("mx"),
-                               F.count(F.lit(1)).alias("n")).collect()[0]
-            if row["n"] > 0:
-                handle(chunk, st.cursor)
-            return row["n"], row["mx"]
-        finally:
-            chunk.unpersist()
-
-    def _complete(self, st: IteratorJobState) -> IteratorJobState:
+    def _complete(self, job_id: str) -> IteratorJobState:
         """markJobCompleted + onComplete dispatch (lib.ts:1011-1031).
 
-        Re-reads state first: a cooperative pause/cancel landing while the
-        FINAL chunk was processing must win — completing over it would
+        Only a running job completes: a pause/cancel landing while the
+        FINAL chunk was processing wins — completing over it would
         silently revert the user's transition and fire on_complete for a
         job they cancelled (the reference's status guard, lib.ts:978-981,
         applies to the completion transition too)."""
-        st = self.store.load(st.job_id)
-        if st.status != "running":
-            return st
-        st.status = "completed"
-        self.store.save(st)
-        if st.on_complete:
+
+        def complete(st):
+            if st.status == "running":
+                st.status = "completed"
+
+        st = self.store.update(job_id, complete)
+        if st.status == "completed" and st.on_complete:
             try:
                 self.registry.resolve(st.on_complete)(st.job_id, st.processed_count)
             except Exception as e:  # noqa: BLE001
@@ -571,11 +566,13 @@ class TableIterator:
                 # and re-fires the handle — at-least-once, mirroring the
                 # n==0 path where the same raise becomes a retry; bounded by
                 # max_retries like any other handle failure.
-                st = self.store.load(st.job_id)
-                st.error_message = f"{type(e).__name__}: {e}"
-                st.retry_count += 1
-                st.status = (
-                    "failed" if st.retry_count >= st.max_retries else "running"
-                )
-                self.store.save(st)
+                error = f"{type(e).__name__}: {e}"
+
+                def step_back(st):
+                    if st.status == "completed":
+                        st.error_message = error
+                        st.retry_count += 1
+                        st.status = "failed" if st.retry_count >= st.max_retries else "running"
+
+                st = self.store.update(job_id, step_back)
         return st

@@ -417,7 +417,7 @@ class BatchAccumulator:
     def _epoch_log(self) -> dict[int, set[str]]:
         """Staging-file basenames per logged epoch (``epochs/N.json``)."""
         log = os.path.join(self.checkpoint_dir, "epochs")
-        # not an in-flight ``_N.json.tmp``
+        # not an in-flight ``_N.json.<uuid>.tmp``
         names = [n for n in fsutil.listdir(self.spark, log)
                  if n.endswith(".json") and n[:-5].isdigit()]
         return {int(n[:-5]): set(json.loads(data))

@@ -8,11 +8,14 @@ from __future__ import annotations
 import bisect
 import json
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from convex_batch_processor_spark import iterator
 from convex_batch_processor_spark.catalog import load_table
 from convex_batch_processor_spark.client import BatchProcessor
 from convex_batch_processor_spark.iterator import (
@@ -206,7 +209,8 @@ def test_range_counts_at_many_ranges_match_the_chunk_predicates(spark, tmp_path,
         expected[bisect.bisect_left(bounds, k)] += 1
     assert counts == expected and sum(counts) == len(keys)
     for i in (0, 1, 500, 999, len(bounds) - 1, len(bounds)):
-        assert src.filter(it._range(bounds, i)).count() == counts[i]
+        lo, hi = bounds[i - 1] if i > 0 else None, bounds[i] if i < len(bounds) else None
+        assert src.filter(it._range(lo, hi)).count() == counts[i]
     # the NULL/size check, approxQuantile and the grouped range count
     assert jobs <= 5
 
@@ -221,28 +225,48 @@ def _run_chunks(it, job_id, jobs_started) -> list[tuple[int, object]]:
     return calls
 
 
+@pytest.mark.parametrize("plan_ranges", [None, False], ids=["planned", "cursor"])
 def test_numeric_key_auto_plans_ranges_and_hands_chunks_uncached(
-    tmp_path, customer, jobs_started
+    tmp_path, customer, jobs_started, plan_ranges
 ):
     """Default mode for a numeric key is the planned-range pager (one
     approxQuantile pass and one range-count pass at start, then pure
-    range filters). Each chunk reaches the handle uncached and starts
-    only the handle's jobs — none for this handle, which keeps the frame
-    for later — and progress advances by the counts fixed at start."""
-    reg, frames = HandleRegistry(), []
-    reg.add("keep", lambda df, c: frames.append(df))
+    range filters). In both modes each chunk reaches the handle uncached
+    as a range filter, and a chunk starts only the handle's jobs — none
+    for this handle, which keeps the frame for later — plus, in cursor
+    mode, the one job that pages its keys. Nothing is cached during or
+    after the run, and progress advances by the chunks' row counts."""
+    jsc = customer.sparkSession.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
+    reg, frames, cached_in_handle = HandleRegistry(), [], []
+
+    def keep(df, c):
+        frames.append(df)
+        cached_in_handle.append(set(jsc.getPersistentRDDs().keySet()) - cached_before)
+
+    reg.add("keep", keep)
     it = make_iter(tmp_path, customer, reg, [])
-    st = it.start("auto", "keep", batch_size=40)
-    assert st.range_bounds is not None  # c_custkey is numeric -> planned
-    assert len(st.range_counts) == len(st.range_bounds) + 1
+    st = it.start("auto", "keep", batch_size=40, plan_ranges=plan_ranges)
+    planned = plan_ranges is None
+    assert (st.range_bounds is not None) == planned  # c_custkey is numeric -> planned
     calls = _run_chunks(it, "auto", jobs_started)
-    assert [jobs for jobs, _ in calls] == [0] * len(calls)
+    assert [jobs for jobs, _ in calls] == [0 if planned else 1] * len(calls)
+    assert cached_in_handle == [set()] * len(frames)
+    assert set(jsc.getPersistentRDDs().keySet()) == cached_before
+    if not cached_before:
+        assert jsc.getPersistentRDDs().isEmpty()
     st = calls[-1][1]
     assert st.status == "completed"
     assert not any(df.storageLevel.useMemory for df in frames)
-    assert [df.count() for df in frames] == [n for n in st.range_counts if n]
+    total = customer.count()
+    if planned:
+        assert len(st.range_counts) == len(st.range_bounds) + 1
+        assert [df.count() for df in frames] == [n for n in st.range_counts if n]
+    else:
+        assert [df.count() for df in frames] == [40] * (total // 40) + [total % 40] * (
+            total % 40 > 0)
     keys = [r.c_custkey for df in frames for r in df.collect()]
-    assert st.processed_count == len(keys) == customer.count()
+    assert st.processed_count == len(keys) == total
     assert sorted(keys) == sorted(r.c_custkey for r in customer.collect())
 
 
@@ -631,6 +655,35 @@ def test_on_complete_failures_bounded_by_max_retries(tmp_path, customer):
         st = it.run("dead-done")
     assert st.status == "failed"
     assert "permanently down" in (st.error_message or "")
+
+
+def test_pause_landing_while_progress_is_saved_is_kept(tmp_path, customer, monkeypatch):
+    """A pause from another store that lands while ``run`` saves a
+    chunk's progress (between its load and its save) is neither lost nor
+    overwritten: the job ends paused, with the chunk's progress. The
+    first clock read in ``run`` is the progress save's; it starts the
+    pause on a thread and waits for it at most 0.5 s."""
+    reg = HandleRegistry()
+    reg.add("noop", lambda df, c: None)
+    it = make_iter(tmp_path, customer, reg, [])
+    st = it.start("race", "noop", batch_size=40)
+    other, threads, now = JobStore(str(tmp_path / "jobs")), [], time.time
+
+    class Clock:
+        @staticmethod
+        def time():
+            if not threads:
+                threads.append(threading.Thread(target=other.pause, args=("race",)))
+                threads[0].start()
+                threads[0].join(0.5)
+            return now()
+
+    monkeypatch.setattr(iterator, "time", Clock)
+    it.run("race", max_chunks=1)
+    threads[0].join()
+    final = other.load("race")
+    assert final.status == "paused"
+    assert final.processed_count == st.range_counts[0] and final.cursor == 1
 
 
 def test_pause_during_failing_chunk_is_not_flipped_to_failed(tmp_path, customer):

@@ -14,6 +14,7 @@ also pin ``write_bytes``' commit protocol.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import decimal
 import os
@@ -185,6 +186,65 @@ def test_write_bytes_commit(spark, tmp_path):
     fsutil.write_bytes(spark, path, b"other", overwrite=True)
     with open(path, "rb") as f:
         assert f.read() == b"other"
+
+
+def test_concurrent_writers_commit_only_their_own_bytes(spark, tmp_path, monkeypatch):
+    """Two writers of one new path: B writes and closes its tmp file
+    between A's close and A's rename, and A's rename runs when B's stream
+    closes. A must commit A's bytes, not B's (B's tmp file truncating and
+    replacing A's under a shared tmp name)."""
+    path = str(tmp_path / "log" / "0.json")
+    real_fs_path, fses, committed = fsutil._fs_path, [], []
+
+    class Stream:
+        def __init__(self, inner, on_close):
+            self.inner, self.on_close = inner, on_close
+
+        def write(self, data):
+            self.inner.write(data)
+
+        def close(self):
+            self.inner.close()
+            self.on_close()
+
+    class Fs:
+        """The real FileSystem, except that A's rename first runs B."""
+
+        def __init__(self, inner, writer):
+            self.inner, self.writer = inner, writer
+
+        def __getattr__(self, name):
+            return getattr(self.inner, name)
+
+        def create(self, tmp, overwrite):
+            if self.writer == "B":
+                return Stream(self.inner.create(tmp, overwrite), self.on_b_close)
+            return self.inner.create(tmp, overwrite)
+
+        def rename(self, src, dst):
+            if self.writer == "B":
+                return self.inner.rename(src, dst)
+            self.a_rename = (src, dst)
+            with contextlib.suppress(IOError):  # B loses the race to A
+                fsutil.write_bytes(spark, path, b"B")
+            return committed[0]
+
+        def on_b_close(self):
+            a = fses[0]
+            committed.append(a.inner.rename(*a.a_rename))
+            with open(path, "rb") as f:
+                committed.append(f.read())
+
+    def fs_path(spark_, p):
+        fs, jp = real_fs_path(spark_, p)
+        fses.append(Fs(fs, "AB"[len(fses)]))
+        return fses[-1], jp
+
+    monkeypatch.setattr(fsutil, "_fs_path", fs_path)
+    fsutil.write_bytes(spark, path, b"A")
+    assert committed == [True, b"A"]
+    with open(path, "rb") as f:
+        assert f.read() == b"A"
 
 
 def test_jvm_classes_cached_per_gateway(spark):
